@@ -119,13 +119,14 @@ def tables(out, seed, size):
 # ---------------------------------------------------------------- text
 
 def _vocab(rng, n):
-    """Distinct synthetic words of 4-9 lowercase letters."""
+    """Distinct synthetic words of 4-9 lowercase letters, as an array
+    (drawing from an array is far faster than from a list)."""
     letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
     words = set()
     while len(words) < n:
         k = int(rng.integers(4, 10))
         words.add("".join(rng.choice(letters, k)))
-    return sorted(words)
+    return np.array(sorted(words))
 
 
 def _doc(rng, vocab, lines=3, words=(7, 11)):
@@ -158,7 +159,8 @@ def corpus(out, seed, size):
     single-word edits of one base text (character-5-gram Jaccard about
     0.9 to each other); documents of different clusters share almost
     no 5-grams. Writes CORPUS_COPIES identical copies so every timed pass
-    reads files no earlier pass read, and the cluster ground truth."""
+    reads files no earlier pass read, one more full copy for the
+    set-up's warm-up pass, and the cluster ground truth."""
     rng = np.random.default_rng(seed)
     vocab = _vocab(rng, 4000)
     n = CORPUS_DOCS[size]
@@ -184,11 +186,9 @@ def corpus(out, seed, size):
                                           type=pa.int64())})
     first = f"{out}/corpus/copy0/part-0.parquet"
     _write(tbl, first)
-    for c in range(1, CORPUS_COPIES):
-        os.makedirs(f"{out}/corpus/copy{c}", exist_ok=True)
-        shutil.copyfile(first, f"{out}/corpus/copy{c}/part-0.parquet")
-    small = tbl.slice(0, max(50, n // 20))
-    _write(small, f"{out}/corpus/warmup/part-0.parquet")
+    for c in [f"copy{c}" for c in range(1, CORPUS_COPIES)] + ["warmup"]:
+        os.makedirs(f"{out}/corpus/{c}", exist_ok=True)
+        shutil.copyfile(first, f"{out}/corpus/{c}/part-0.parquet")
     _write(truth, f"{out}/corpus_truth.parquet")
 
 

@@ -58,6 +58,8 @@ final class DedupBackfill(data: String) extends Workload {
 
   def setup(spark: SparkSession, tr: Tracer): Unit = {
     docsPerPass = read(spark, copies.head).count()
+    // A full-size pass over a copy no timed pass reads, so the first
+    // timed pass is as warm as the rest.
     runPass(spark, read(spark, "warmup"), tr)
   }
 

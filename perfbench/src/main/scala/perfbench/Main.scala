@@ -20,6 +20,8 @@ trait Workload {
   def check(spark: SparkSession): Map[String, Any]
   /** Per-layer metrics from the recorded spans. */
   def layers(tr: Tracer, ops: Seq[OpRecord]): Map[String, Double]
+  /** Ops that failed during set-up, for the error rate. */
+  def setupErrors: Seq[String] = Nil
   /** Workload-level numbers for the run summary. */
   def summary: Map[String, Any] = Map.empty
 }
@@ -32,8 +34,6 @@ final case class OpRecord(i: Int, wallS: Double, ok: Boolean, error: String,
   *        --out DIR --launch-ns EPOCH_NS --cores N
   * Writes `<out>/result.json`; `run.py` turns it into the metrics line. */
 object Main {
-  val SetupRepeats = 2
-
   def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
@@ -68,9 +68,12 @@ object Main {
       case w => sys.error(s"unknown workload $w")
     }
 
-    // Set-up: from process launch to the first timed op.
+    // Set-up: from process launch to the first timed op. The warm-up's
+    // leftover state is released too, so the first op starts as clean
+    // as the rest.
     val spark = session(cores)
     wl.setup(spark, tracer)
+    State.release(spark)
     val setupS = (epochNs - launchNs) / 1e9
 
     tracer.attach(spark)
@@ -108,6 +111,7 @@ object Main {
         "leftover_persisted_rdds" -> o.leftoverRdds,
         "leftover_ckpt_dirs" -> o.leftoverCkpt)).toSeq,
       "peak_rss_mb" -> State.peakRssMb,
+      "setup_errors" -> wl.setupErrors,
       "checks" -> checks,
       "summary" -> wl.summary,
       "layers" -> layers)
@@ -116,7 +120,8 @@ object Main {
       Map("id" -> s.id, "parent" -> s.parent, "op" -> s.op, "name" -> s.name,
         "start_ns" -> s.startNs, "end_ns" -> s.endNs,
         "self_s" -> (s.durS - tracer.childCover(s)),
-        "counters" -> s.after.map { case (k, v) => k -> (v - s.before(k)) })
+        "counters" -> (s.after.map { case (k, v) => k -> (v - s.before(k)) } +
+          ("in_job_s" -> s.inJobS)))
     ).toSeq)
     spark.stop()
   }
@@ -179,8 +184,8 @@ object Layers {
     Map(
       "spark.jobs" -> per("jobs"), "spark.stages" -> per("stages"),
       "spark.tasks" -> per("tasks"), "spark.catalyst_s" -> per("catalyst_s"),
-      "spark.in_job_s" -> per("in_job_s"),
-      "spark.driver_gap_s" -> mean(opSpans.map(s => s.durS - s.delta("in_job_s"))),
+      "spark.in_job_s" -> mean(opSpans.map(_.inJobS)),
+      "spark.driver_gap_s" -> mean(opSpans.map(s => s.durS - s.inJobS)),
       "spark.task_s" -> per("task_s"),
       "spark.core_util" -> mean(opSpans.map(s => s.delta("task_s") / (s.durS * cores))),
       "spark.gc_s" -> per("gc_s"),

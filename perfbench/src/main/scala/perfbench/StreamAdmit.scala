@@ -3,21 +3,27 @@ package perfbench
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.GraftClient
 import graft.catalog.MetricQueryRequest
+import graft.llm.Dedup
 import graft.planner.MetricState
 import graft.streaming.StreamingPipeline
 
 /** `stream-admit`: each op lands one document delta and one event
   * delta, drains both ingest streams with AvailableNow, compacts the
-  * blocked stores when the policy says so, then reads. */
+  * blocked stores, then reads. Set-up lands the first [[WarmSteps]]
+  * steps, so every timed step finds one committed epoch, brings it to
+  * [[CompactEpochs]] and compacts: every op has the same shape. */
 final class StreamAdmit(data: String, out: String) extends Workload {
   /** Committed epochs that trigger compaction. */
   val CompactEpochs = 2
+  /** Steps landed by set-up: the first admits, the second compacts. */
+  val WarmSteps = 2
   val Dims = Seq("event_type", "day")
   val Measures = Seq(MetricState.Measure("value", "value"))
   val Read = MetricQueryRequest(Seq("event_value"), Seq("event_type"))
@@ -29,17 +35,15 @@ final class StreamAdmit(data: String, out: String) extends Workload {
   val writeS, readS, compactS = mutable.ArrayBuffer[Double]()
   var compactions = 0
   var compactBytes = 0L
+  private val setupErrs = mutable.ArrayBuffer[String]()
 
-  /** One ingest chain rooted at `root`. */
-  final class Chain(val root: String) {
-    def store(g: Int): Seq[String] =
-      Seq("corpus", "sig", "sk", "fp", "pairs").map(s => s"$root/gen$g/$s")
-    val landDocs = s"$root/landing/docs"
-    val tables = s"$root/landing/tables"
-    val landEvents = s"$tables/events.parquet"
-    val state = s"$root/state"
-  }
-  private val chain = new Chain(s"$out/stream")
+  private val root = s"$out/stream"
+  private def store(g: Int): Seq[String] =
+    Seq("corpus", "sig", "sk", "fp", "pairs").map(s => s"$root/gen$g/$s")
+  private val landDocs = s"$root/landing/docs"
+  private val tables = s"$root/landing/tables"
+  private val landEvents = s"$tables/events.parquet"
+  private val state = s"$root/state"
 
   private def rmrf(p: String): Unit = {
     val path = Paths.get(p)
@@ -66,77 +70,82 @@ final class StreamAdmit(data: String, out: String) extends Workload {
     }
   }
 
-  /** Lands step `i`, drains both streams, compacts when due; returns
-    * the write wall seconds. */
-  private def write(spark: SparkSession, c: Chain, g: Int, i: Int, tr: Tracer): Int = {
+  /** Lands step `i`, drains both streams and compacts when due. The
+    * compactions of timed steps are recorded. */
+  private def write(spark: SparkSession, i: Int, timed: Boolean, tr: Tracer): Unit = {
     val s = steps(i)
-    copy(s"$data/stream/docs/$s", c.landDocs)
-    copy(s"$data/stream/events/$s", c.landEvents)
-    val Seq(corpus, sig, sk, fp, pairs) = c.store(g)
+    copy(s"$data/stream/docs/$s", landDocs)
+    copy(s"$data/stream/events/$s", landEvents)
+    val Seq(corpus, sig, sk, fp, pairs) = store(gen)
     tr.span(spark, "streaming.admit") {
-      StreamingPipeline.startBlockedCorpusIngest(spark, c.landDocs, corpus, sig,
-        sk, fp, pairs, s"${c.root}/cp/docs", Weights).awaitTermination()
+      StreamingPipeline.startBlockedCorpusIngest(spark, landDocs, corpus, sig,
+        sk, fp, pairs, s"$root/cp/docs", Weights).awaitTermination()
     }
     tr.span(spark, "streaming.state_fold") {
-      StreamingPipeline.startMetricStateIngest(spark, c.landEvents, c.state,
-        s"${c.root}/cp/events", Dims, Measures).awaitTermination()
+      StreamingPipeline.startMetricStateIngest(spark, landEvents, state,
+        s"$root/cp/events", Dims, Measures).awaitTermination()
     }
-    val pressure = StreamingPipeline.blockedStorePressure(spark, sig, c.store(g))
-    if (!StreamingPipeline.shouldCompact(pressure, maxEpochs = CompactEpochs)) g
-    else {
+    val pressure = StreamingPipeline.blockedStorePressure(spark, sig, store(gen))
+    if (StreamingPipeline.shouldCompact(pressure, maxEpochs = CompactEpochs)) {
       val t0 = System.nanoTime()
       tr.span(spark, "streaming.compact") {
-        val Seq(dc, ds, dk, df, dp) = c.store(g + 1)
+        val Seq(dc, ds, dk, df, dp) = store(gen + 1)
         StreamingPipeline.compactBlockedStores(spark, corpus, sig, sk, fp, pairs,
           dc, ds, dk, df, dp)
       }
       // cut-over done: the old generation is no longer read
-      rmrf(s"${c.root}/gen$g")
-      if (c eq chain) {
+      rmrf(s"$root/gen$gen")
+      gen += 1
+      if (timed) {
         compactS += (System.nanoTime() - t0) / 1e9
         compactions += 1
         compactBytes += pressure.bytes
       }
-      g + 1
     }
   }
 
-  private def read(spark: SparkSession, c: Chain, tr: Tracer): Unit =
+  private def read(spark: SparkSession, tr: Tracer): Unit =
     tr.span(spark, "streaming.read") {
-      StreamingPipeline.currentMetrics(spark, c.state).collect()
-      tr.span(spark, "api.query")(client.query(spark, c.tables, Read))
+      StreamingPipeline.currentMetrics(spark, state).collect()
+      tr.span(spark, "api.query")(client.query(spark, tables, Read))
     }
 
   def setup(spark: SparkSession, tr: Tracer): Unit = {
     client = GraftClient.fromManifest("manifests/semantic_manifest.yml")
-    // The ingest stream's micro-batch session resolves the engine's
-    // native kernels by name, and finds them only if a batch call
-    // registered them on this session before the stream started: on a
-    // fresh session the first drain otherwise fails with
-    // UNRESOLVED_ROUTINE intersect_count_long. One batch dedup call
-    // here registers them, as any earlier batch job in the session would.
-    graft.llm.Dedup.blockedDedupPairs(
-      spark.read.parquet(s"$data/stream/docs/${steps.head}"), "doc_id", "text").count()
-    val warm = new Chain(s"$out/stream-warmup")
-    rmrf(warm.root)
-    write(spark, warm, 0, 0, tr)
-    read(spark, warm, tr)
-    rmrf(warm.root)
-    rmrf(chain.root)
+    rmrf(root)
+    // Known engine defect: on a fresh session the first drain of the
+    // blocked ingest onto a non-empty store (the second step) fails with
+    // UNRESOLVED_ROUTINE intersect_count_long, because the stream's
+    // session does not see native kernels that no batch call has
+    // registered yet. The failure is recorded as a failed op; one batch
+    // dedup call then registers the kernels (and warms the paths the
+    // ingest shares with it), and the step is landed again: the
+    // restarted stream replays the failed batch from its checkpoint.
+    for (i <- 0 until WarmSteps)
+      try write(spark, i, timed = false, tr)
+      catch { case NonFatal(e) =>
+        setupErrs += s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300)
+        Dedup.blockedDedupPairs(
+          spark.read.parquet(s"$data/stream/docs/${steps.head}"), "doc_id", "text").count()
+        write(spark, i, timed = false, tr)
+      }
+    read(spark, tr)
   }
 
-  override def hasOp(i: Int): Boolean = i < steps.size
+  override def setupErrors: Seq[String] = setupErrs.toSeq
+
+  override def hasOp(i: Int): Boolean = i + WarmSteps < steps.size
 
   override def probe(spark: SparkSession, i: Int, tr: Tracer): Unit =
     tr.span(spark, "planner.compile") {
-      new graft.planner.MetricPlanner(client.registry).compile(spark, chain.tables, Read)
+      new graft.planner.MetricPlanner(client.registry).compile(spark, tables, Read)
     }
 
   def op(spark: SparkSession, i: Int, tr: Tracer): Unit = {
     val t0 = System.nanoTime()
-    gen = write(spark, chain, gen, i, tr)
+    write(spark, i + WarmSteps, timed = true, tr)
     val t1 = System.nanoTime()
-    read(spark, chain, tr)
+    read(spark, tr)
     writeS += (t1 - t0) / 1e9
     readS += (System.nanoTime() - t1) / 1e9
   }
@@ -150,23 +159,23 @@ final class StreamAdmit(data: String, out: String) extends Workload {
   def check(spark: SparkSession): Map[String, Any] = {
     val n = writeS.size
     if (n == 0) return Map("failures" -> Seq("no step completed"))
-    val Seq(corpus, sig, _, _, _) = chain.store(gen)
+    val Seq(corpus, sig, _, _, _) = store(gen)
     val got = StreamingPipeline.readBlockedCorpus(spark, corpus, sig)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    val landed = spark.read.parquet(chain.landDocs).select("doc_id")
+    val landed = spark.read.parquet(landDocs).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     val truth = spark.read.parquet(s"$data/stream_truth.parquet")
       .filter(col("admit")).select("doc_id").collect().map(_.getLong(0))
       .toSet.intersect(landed)
     admitted = got.size; rejected = landed.size - got.size
     def ordered(df: DataFrame) = df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
-    val folded = ordered(StreamingPipeline.currentMetrics(spark, chain.state))
-    val events = spark.read.parquet(chain.landEvents).withColumn("day", to_date(col("ts")))
+    val folded = ordered(StreamingPipeline.currentMetrics(spark, state))
+    val events = spark.read.parquet(landEvents).withColumn("day", to_date(col("ts")))
     val recomputed = ordered(MetricState.render(MetricState.buildState(events, Dims, Measures)))
-    val (sb, sf) = Seq(s"${chain.root}/gen$gen", chain.state).map(dirBytes)
+    val (sb, sf) = Seq(s"$root/gen$gen", state).map(dirBytes)
       .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
     storeBytes = sb; storeFiles = sf
-    landedBytes = dirBytes(s"${chain.root}/landing")._1
+    landedBytes = dirBytes(s"$root/landing")._1
     val failures = Seq(
       if (got == truth) None else Some(
         s"admitted set differs: ${(got -- truth).size} extra, ${(truth -- got).size} missing"),

@@ -16,18 +16,17 @@ final class Counters extends SparkListener with QueryExecutionListener {
   val jobs, stages, tasks, taskNs, gcNs, shuffleRead, shuffleWrite, spill,
       catalystNs = new AtomicLong
   val peakExecMem = new AtomicLong
-  private var activeJobs = 0
-  private var inJobSince = 0L
-  private var inJobDone = 0L
+  private val jobStartMs = mutable.Map[Int, Long]()
+  private val jobWallsMs = mutable.ArrayBuffer[(Long, Long)]()
 
+  // Job walls come from the events' own timestamps, not from when the
+  // listener bus gets round to delivering them.
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     jobs.incrementAndGet()
-    if (activeJobs == 0) inJobSince = System.nanoTime()
-    activeJobs += 1
+    jobStartMs(e.jobId) = e.time
   }
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-    activeJobs = math.max(0, activeJobs - 1)
-    if (activeJobs == 0) inJobDone += System.nanoTime() - inJobSince
+    jobStartMs.remove(e.jobId).foreach(t => jobWallsMs += ((t, e.time)))
   }
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     stages.incrementAndGet(); ()
@@ -54,15 +53,23 @@ final class Counters extends SparkListener with QueryExecutionListener {
   override def onFailure(funcName: String, qe: QueryExecution,
       exception: Exception): Unit = ()
 
-  /** Wall time during which at least one job was running. */
-  def inJobNs: Long = synchronized {
-    inJobDone + (if (activeJobs > 0) System.nanoTime() - inJobSince else 0L)
+  /** Seconds of the epoch-ms window [fromMs, toMs] during which at
+    * least one finished job was running. */
+  def inJobS(fromMs: Long, toMs: Long): Double = synchronized {
+    val clipped = jobWallsMs.map { case (a, b) => (math.max(a, fromMs), math.min(b, toMs)) }
+      .filter { case (a, b) => b > a }.sortBy(_._1)
+    var covered = 0L; var upTo = fromMs
+    for ((a, b) <- clipped) {
+      val s = math.max(a, upTo)
+      if (b > s) { covered += b - s; upTo = b }
+    }
+    covered / 1e3
   }
 
   def snapshot(): Map[String, Double] = Map(
     "jobs" -> jobs.get.toDouble, "stages" -> stages.get.toDouble,
     "tasks" -> tasks.get.toDouble, "task_s" -> taskNs.get / 1e9,
-    "gc_s" -> gcNs.get / 1e9, "in_job_s" -> inJobNs / 1e9,
+    "gc_s" -> gcNs.get / 1e9,
     "catalyst_s" -> catalystNs.get / 1e9,
     "shuffle_read_bytes" -> shuffleRead.get.toDouble,
     "shuffle_write_bytes" -> shuffleWrite.get.toDouble,
@@ -71,7 +78,7 @@ final class Counters extends SparkListener with QueryExecutionListener {
 
 /** One recorded span: a call into a layer. */
 final case class Span(id: Int, parent: Int, op: Int, name: String,
-    startNs: Long, endNs: Long, before: Map[String, Double],
+    startNs: Long, endNs: Long, inJobS: Double, before: Map[String, Double],
     after: Map[String, Double]) {
   def durS: Double = (endNs - startNs) / 1e9
   def delta(k: String): Double = after(k) - before(k)
@@ -106,14 +113,15 @@ final class Tracer(val enabled: Boolean) {
       val id = nextId; nextId += 1
       val parent = stack.headOption.getOrElse(-1)
       val before = counters.snapshot()
-      val t0 = System.nanoTime()
+      val t0 = System.nanoTime(); val t0Ms = System.currentTimeMillis()
       stack.push(id)
       try body
       finally {
         stack.pop()
-        val t1 = System.nanoTime()
+        val t1 = System.nanoTime(); val t1Ms = System.currentTimeMillis()
         org.apache.spark.sql.BenchAccess.drain(spark.sparkContext)
-        spans += Span(id, parent, op, name, t0, t1, before, counters.snapshot())
+        spans += Span(id, parent, op, name, t0, t1, counters.inJobS(t0Ms, t1Ms),
+          before, counters.snapshot())
       }
     }
 
