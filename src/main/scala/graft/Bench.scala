@@ -129,19 +129,15 @@ object Bench {
     * evict the JSON record line. The WindowExec "No Partition Defined"
     * warning fires once per bounded-cardinality global window (banded
     * ranks over `__bk` bucket frames — bounded by construction) and
-    * repeated thousands of times in the r17 kill-log; the function-
-    * registry "replaced" notice fires on every re-registration of the
-    * winnowing UDF family. Harness-level only — library code is
-    * untouched and a user's own logging config still sees everything. */
+    * repeated thousands of times in the r17 kill-log. Harness-level
+    * only — library code is untouched and a user's own logging config
+    * still sees everything. */
   def quietKnownLogFloods(): Unit =
     try {
       import org.apache.logging.log4j.Level
       import org.apache.logging.log4j.core.config.Configurator
       Configurator.setLevel(
         "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
-      Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
-        Level.ERROR)
     } catch { case _: Throwable => () }
 
   def main(args: Array[String]): Unit = {

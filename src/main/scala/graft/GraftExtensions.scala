@@ -12,10 +12,11 @@ import graft.functions.{HexDecodeUtf8, MinHashSig}
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)`). Runtime registration via
-  * `HexDecodeUtf8.register` / `MinHashSig.register` /
-  * `plans.AsOfJoinNative.ensureStrategy` remains available for
-  * sessions the caller doesn't construct (tests, notebooks). */
+  * (or `.withExtensions(new GraftExtensions)`). For sessions the caller
+  * doesn't construct (tests, notebooks), `HexDecodeUtf8.register` adds
+  * `hex_decode_utf8` and `plans.AsOfJoinNative.ensureStrategy` adds the
+  * strategy at runtime. The DataFrame builders (`graft.functions.*
+  * .column`) need neither: they wrap their expressions directly. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

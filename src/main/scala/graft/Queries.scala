@@ -227,7 +227,7 @@ object Queries {
     (s, dir) => t(s, dir, "documents")
       .select(col("doc_id"),
         lower(hex(substring(col("text"), 1, 32).cast("binary"))).as("hex32"),
-        graft.functions.HexDecodeUtf8.column(s,
+        graft.functions.HexDecodeUtf8.column(
           lower(hex(substring(col("text"), 1, 32).cast("binary"))))
           .as("decoded"))
       .orderBy("doc_id"),

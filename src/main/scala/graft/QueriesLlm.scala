@@ -251,7 +251,7 @@ object QueriesLlm {
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"),
         concat_ws(",",
-          graft.functions.MinHashSig.column(s, col("text"), 12)).as("sig"))
+          graft.functions.MinHashSig.column(col("text"), 12)).as("sig"))
       .orderBy("doc_id"),
     Some(s"""$duckMinhashCtes
       SELECT doc_id, array_to_string(sig, ',') AS sig FROM s ORDER BY doc_id"""))
@@ -280,7 +280,7 @@ object QueriesLlm {
     (s, dir) => t(s, dir, "documents")
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), graft.functions.SimHash16
-        .column(s, graft.llm.TextAnalysis.tokens(col("text"))).as("simhash"))
+        .column(graft.llm.TextAnalysis.tokens(col("text"))).as("simhash"))
       .orderBy("doc_id"),
     Some("""
       SELECT doc_id,
@@ -1437,7 +1437,7 @@ object QueriesLlm {
     (s, dir) => {
       val codec = BpeCache.get(s, dir, 40)
       val docs = t(s, dir, "documents")
-      val enc = graft.llm.Bpe.encodeColumn(s, codec, col("text"))
+      val enc = graft.llm.Bpe.encodeColumn(codec, col("text"))
       docs.select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_ws_tokens"),
         size(enc).cast("long").as("n_bpe_tokens"),
@@ -1472,7 +1472,7 @@ object QueriesLlm {
     (s, dir) => {
       val codec = BpeCache.get(s, dir, 40)
       val docs = t(s, dir, "documents")
-      val enc = graft.llm.Bpe.encodeColumn(s, codec, col("text"))
+      val enc = graft.llm.Bpe.encodeColumn(codec, col("text"))
       docs.select(col("lang"),
           TextAnalysis.tokenCount(col("text")).as("ws"),
           size(enc).cast("long").as("bpe"))
@@ -2437,7 +2437,7 @@ object QueriesLlm {
       val aug = concat(col("text"),
         lit(" e\u0301 \u304B\u3099 a\u0301\u0323 \uFB01 x\u0007y\u000Bz\u007F w\u0085v  tail"))
       graft.llm.TextAnalysis.normalizeText(
-        s, d.select(col("doc_id"), aug.as("text")), "doc_id", "text")
+        d.select(col("doc_id"), aug.as("text")), "doc_id", "text")
         .orderBy("doc_id")
     },
     Some("""
@@ -2746,7 +2746,7 @@ object QueriesLlm {
   private val q144 = Q("q144_bpe_encode",
     (s, dir) => {
       val codec = new graft.llm.BpeCodec(bpeFixedMerges.toArray)
-      val enc = graft.llm.Bpe.encodeColumn(s, codec, col("text"))
+      val enc = graft.llm.Bpe.encodeColumn(codec, col("text"))
       t(s, dir, "documents")
         .filter(length(trim(col("text"))) > 0)
         .select(col("doc_id"),
@@ -6866,7 +6866,7 @@ object QueriesLlm {
         .crossJoin(vocab.select(col("tok").as("tok_b")))
         .filter(col("tok_a") < col("tok_b"))
       pairs.select(col("tok_a"), col("tok_b"),
-        graft.functions.JaroWinkler.column(s, col("tok_a"),
+        graft.functions.JaroWinkler.column(col("tok_a"),
           col("tok_b")).as("jw"))
         .filter(col("jw") > 0.5)
         .orderBy("tok_a", "tok_b")

@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Static probe kernel shared by interpreted eval and the generated
   * code. One md5 per key (Kirsch–Mitzenmacher double hashing, same
@@ -85,19 +84,11 @@ case class BloomProbe(child: Expression, k: Int, m: Int,
 }
 
 object BloomProbe {
-  private val counter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Column API, [[MultiMatch.column]]-style temp-function
-    * registration; the name carries a fresh counter so two sketches
-    * in one session never collide. The key is cast to string exactly
-    * as [[graft.llm.BloomFilter.bitPositions]] does, so any key type
-    * (the engine's 60-bit BIGINT window hashes, raw strings) digests
+  /** The key is cast to string exactly as
+    * [[graft.llm.BloomFilter.bitPositions]] does, so any key type (the
+    * engine's 60-bit BIGINT window hashes, raw strings) digests
     * identically in both probe forms and in the DuckDB oracle. */
-  def column(spark: SparkSession, key: Column, k: Int, m: Int,
-      bcast: Broadcast[Array[Long]]): Column = {
-    val name = s"bloom_probe_${counter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomProbe(exprs.head, k, m, bcast), "scala_udf")
-    call_function(name, key.cast("string"))
-  }
+  def column(key: Column, k: Int, m: Int, bcast: Broadcast[Array[Long]]): Column =
+    GraftSqlBridge.column(key.cast("string"))(exprs =>
+      BloomProbe(exprs.head, k, m, bcast))
 }

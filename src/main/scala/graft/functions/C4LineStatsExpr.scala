@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass kernel for the C4 page/line statistics ([[C4LineStats]]).
@@ -80,10 +80,6 @@ case class C4LineStats(child: Expression, minWords: Int = 3)
 }
 
 object C4LineStats {
-  def column(spark: SparkSession, c: Column, minWords: Int = 3): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"c4_line_stats_$minWords",
-      exprs => C4LineStats(exprs.head, minWords), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"c4_line_stats_$minWords", c)
-  }
+  def column(c: Column, minWords: Int = 3): Column =
+    GraftSqlBridge.column(c)(exprs => C4LineStats(exprs.head, minWords))
 }

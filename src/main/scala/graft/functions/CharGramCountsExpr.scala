@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native per-document char-bigram COUNTER: one codegen pass emitting
@@ -75,9 +75,6 @@ case class CharGramCounts(child: Expression) extends UnaryExpression {
 }
 
 object CharGramCounts {
-  def column(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_gram_counts", exprs => CharGramCounts(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("char_gram_counts", c)
-  }
+  def column(c: Column): Column =
+    GraftSqlBridge.column(c)(exprs => CharGramCounts(exprs.head))
 }

@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** One-pass int8 symmetric-quantization round-trip kernel:
   * scale = max |e_i| over the first `dims` elements,
@@ -105,12 +104,8 @@ case class Int8Quant(child: Expression, dims: Int = 64)
 }
 
 object Int8Quant {
-  def column(spark: SparkSession, c: Column, dims: Int = 64): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"int8_quant_$dims",
-      exprs => Int8Quant(exprs.head, dims), "scala_udf")
-    call_function(s"int8_quant_$dims", c)
-  }
+  def column(c: Column, dims: Int = 64): Column =
+    GraftSqlBridge.column(c)(exprs => Int8Quant(exprs.head, dims))
 }
 
 /** The int8 CODES themselves (same scheme as [[Int8Quant]]:
@@ -187,10 +182,6 @@ case class Int8Codes(child: Expression, dims: Int = 64)
 }
 
 object Int8Codes {
-  def column(spark: SparkSession, c: Column, dims: Int = 64): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"int8_codes_$dims",
-      exprs => Int8Codes(exprs.head, dims), "scala_udf")
-    call_function(s"int8_codes_$dims", c)
-  }
+  def column(c: Column, dims: Int = 64): Column =
+    GraftSqlBridge.column(c)(exprs => Int8Codes(exprs.head, dims))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 
 /** Native `intersect_count_long(a, b)` → Long: exactly
   * `size(array_intersect(a, b))` for Array[Long] inputs — the number
@@ -70,7 +70,9 @@ object IntersectCountLongHelper {
 }
 
 case class IntersectCountLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "intersect_count_long"
 
@@ -92,11 +94,9 @@ case class IntersectCountLong(left: Expression, right: Expression)
 }
 
 object IntersectCountLong {
-  def column(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_count_long",
-      exprs => IntersectCountLong(exprs.head, exprs(1)), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      "intersect_count_long", a, b)
-  }
+  def column(a: Column, b: Column): Column =
+    GraftSqlBridge.column(a, b)(exprs => IntersectCountLong(exprs.head, exprs(1)))
+
+  @deprecated("the session is unused; call column(a, b)", "0.1.0")
+  def column(spark: SparkSession, a: Column, b: Column): Column = column(a, b)
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen entry point for [[JaccardShingles]]. Exact Jaccard of the
@@ -55,12 +56,6 @@ case class JaccardShingles(left: Expression, right: Expression, shingleLen: Int 
 }
 
 object JaccardShingles {
-  def column(spark: org.apache.spark.sql.SparkSession,
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_shingles",
-      exprs => JaccardShingles(exprs(0), exprs(1)), "scala_udf")
-    org.apache.spark.sql.functions.call_function("jaccard_shingles", a, b)
-  }
+  def column(a: Column, b: Column): Column =
+    GraftSqlBridge.column(a, b)(exprs => JaccardShingles(exprs(0), exprs(1)))
 }

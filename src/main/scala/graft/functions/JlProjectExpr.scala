@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Native Johnson–Lindenstrauss random projection over an embedding
   * column: `outDims` components, each the ascending-dim fold of
@@ -110,12 +109,5 @@ case class JlProject(child: Expression, outDims: Int = 16, dims: Int = 64)
 
 object JlProject {
   def column(emb: Column, outDims: Int = 16, dims: Int = 64): Column =
-    column(SparkSession.active, emb, outDims, dims)
-
-  def column(spark: SparkSession, emb: Column, outDims: Int, dims: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"jl_project_${outDims}_$dims",
-      exprs => JlProject(exprs.head, outDims, dims), "scala_udf")
-    call_function(s"jl_project_${outDims}_$dims", emb)
-  }
+    GraftSqlBridge.column(emb)(exprs => JlProject(exprs.head, outDims, dims))
 }

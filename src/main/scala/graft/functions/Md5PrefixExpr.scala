@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared allocation-free MD5 plumbing for the digest-derived hash
@@ -73,7 +73,9 @@ object Md5Hashing {
 /** Native `md5prefix60(str)` → Long in [0, 2^60): the engine's
   * portable string hash (= Dedup.shingleHash) without the hex-string
   * detour. */
-case class Md5Prefix60(child: Expression) extends UnaryExpression {
+case class Md5Prefix60(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "md5prefix60"
 
@@ -90,11 +92,8 @@ case class Md5Prefix60(child: Expression) extends UnaryExpression {
 }
 
 object Md5Prefix60 {
-  def column(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5prefix60", exprs => Md5Prefix60(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("md5prefix60", c)
-  }
+  def column(c: Column): Column =
+    GraftSqlBridge.column(c)(exprs => Md5Prefix60(exprs.head))
 }
 
 /** Native distinct hashed shingle set: `hashed_shingles(text, k)` →
@@ -136,7 +135,8 @@ object HashedShinglesHelper {
 }
 
 case class HashedShingles(child: Expression, shingleLen: Int = 5)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = false
   override def prettyName: String = "hashed_shingles"
@@ -163,10 +163,9 @@ case class HashedShingles(child: Expression, shingleLen: Int = 5)
 }
 
 object HashedShingles {
-  def column(spark: SparkSession, c: Column, k: Int = 5): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"hashed_shingles_$k",
-      exprs => HashedShingles(exprs.head, k), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"hashed_shingles_$k", c)
-  }
+  def column(c: Column, k: Int = 5): Column =
+    GraftSqlBridge.column(c)(exprs => HashedShingles(exprs.head, k))
+
+  @deprecated("the session is unused; call column(c)", "0.1.0")
+  def column(spark: SparkSession, c: Column): Column = column(c)
 }

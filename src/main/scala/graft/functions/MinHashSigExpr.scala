@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen entry point for [[MinHashSig]]. One MD5 per shingle, all
@@ -73,16 +73,8 @@ case class MinHashSig(child: Expression, numHashes: Int = 12, shingleLen: Int = 
 }
 
 object MinHashSig {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head), "scala_udf")
-
-  def column(spark: SparkSession, c: Column, numHashes: Int = 12): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"minhash_sig_$numHashes",
-      exprs => MinHashSig(exprs.head, numHashes), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"minhash_sig_$numHashes", c)
-  }
+  def column(c: Column, numHashes: Int = 12): Column =
+    GraftSqlBridge.column(c)(exprs => MinHashSig(exprs.head, numHashes))
 }
 
 /** Combined pass for the LSH pipeline: ONE digest per shingle yields
@@ -157,10 +149,10 @@ case class MinHashShingles(child: Expression, numHashes: Int = 12, shingleLen: I
 }
 
 object MinHashShingles {
-  def column(spark: SparkSession, c: Column, numHashes: Int = 12): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"minhash_shingles_$numHashes",
-      exprs => MinHashShingles(exprs.head, numHashes), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"minhash_shingles_$numHashes", c)
-  }
+  def column(c: Column, numHashes: Int = 12): Column =
+    GraftSqlBridge.column(c)(exprs => MinHashShingles(exprs.head, numHashes))
+
+  @deprecated("the session is unused; call column(c, numHashes)", "0.1.0")
+  def column(spark: SparkSession, c: Column, numHashes: Int): Column =
+    column(c, numHashes)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen entry point for [[NfcNormalize]] — top-level object so the
@@ -55,14 +55,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object NfcNormalize {
-  /** Idempotent per-session registration; afterwards callable from SQL
-    * and via [[column]]. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-
-  def column(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("nfc_normalize", c)
-  }
+  def column(c: Column): Column =
+    GraftSqlBridge.column(c)(exprs => NfcNormalize(exprs.head))
 }

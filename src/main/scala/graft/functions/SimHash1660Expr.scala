@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType,
+  StructField, StructType}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 
 /** Combined pass for the composed-dedup fingerprint prep: ONE md5 per
   * token yields BOTH the 16-bit sort-key simhash ([[SimHash16]]) and
@@ -64,7 +65,9 @@ object SimHash1660Helper {
   }
 }
 
-case class SimHash1660(child: Expression) extends UnaryExpression {
+case class SimHash1660(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("sh16", LongType, nullable = false),
     StructField("sh60", LongType, nullable = false)))
@@ -83,9 +86,9 @@ case class SimHash1660(child: Expression) extends UnaryExpression {
 }
 
 object SimHash1660 {
-  def column(spark: SparkSession, tokens: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash1660", exprs => SimHash1660(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("simhash1660", tokens)
-  }
+  def column(tokens: Column): Column =
+    GraftSqlBridge.column(tokens)(exprs => SimHash1660(exprs.head))
+
+  @deprecated("the session is unused; call column(tokens)", "0.1.0")
+  def column(spark: SparkSession, tokens: Column): Column = column(tokens)
 }

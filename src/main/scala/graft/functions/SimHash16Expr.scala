@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Codegen entry point for [[SimHash16]]: 16-bit SimHash over a token
   * array, ONE md5 per token with all 16 bit-votes read from the same
@@ -68,9 +68,6 @@ case class SimHash16(child: Expression) extends UnaryExpression {
 }
 
 object SimHash16 {
-  def column(spark: SparkSession, tokens: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash16", exprs => SimHash16(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("simhash16", tokens)
-  }
+  def column(tokens: Column): Column =
+    GraftSqlBridge.column(tokens)(exprs => SimHash16(exprs.head))
 }

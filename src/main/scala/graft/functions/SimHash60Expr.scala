@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** 60-bit SimHash over a token array — the fingerprint width the
   * Manku-Jain-Das Sarma web-dedup scheme (WWW'07) blocks and probes;
@@ -69,9 +69,6 @@ case class SimHash60(child: Expression) extends UnaryExpression {
 }
 
 object SimHash60 {
-  def column(spark: SparkSession, tokens: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("simhash60", tokens)
-  }
+  def column(tokens: Column): Column =
+    GraftSqlBridge.column(tokens)(exprs => SimHash60(exprs.head))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Intersection SIZE of two SORTED long arrays by a single primitive
   * merge pass — the verification kernel for set-similarity joins.
@@ -58,11 +58,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  def column(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      "sorted_intersect_count", a, b)
-  }
+  def column(a: Column, b: Column): Column =
+    GraftSqlBridge.column(a, b)(exprs => SortedIntersectCount(exprs.head, exprs(1)))
 }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Native sign-random-projection bucket id over an embedding column.
   *
@@ -115,17 +114,6 @@ case class SrpBucket(child: Expression, bits: Int = 8, dims: Int = 64)
 }
 
 object SrpBucket {
-  /** Registers in `SparkSession.active` — fine for the common
-    * single-session case; pass the DataFrame's own session via the
-    * other overload when sessions are isolated (`spark.newSession()`),
-    * or the analyzer of the owning session won't see the function. */
   def column(emb: Column, bits: Int = 8, dims: Int = 64): Column =
-    column(SparkSession.active, emb, bits, dims)
-
-  def column(spark: SparkSession, emb: Column, bits: Int, dims: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"srp_bucket_${bits}_$dims",
-      exprs => SrpBucket(exprs.head, bits, dims), "scala_udf")
-    call_function(s"srp_bucket_${bits}_$dims", emb)
-  }
+    GraftSqlBridge.column(emb)(exprs => SrpBucket(exprs.head, bits, dims))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass kernel for the word-unigram entropy quality signal
@@ -84,9 +84,6 @@ case class UnigramEntropy(child: Expression) extends UnaryExpression {
 }
 
 object UnigramEntropy {
-  def column(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unigram_entropy", exprs => UnigramEntropy(exprs.head), "scala_udf")
-    org.apache.spark.sql.functions.call_function("unigram_entropy", c)
-  }
+  def column(c: Column): Column =
+    GraftSqlBridge.column(c)(exprs => UnigramEntropy(exprs.head))
 }

@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 
 /** Native codegen'd vector dot product over `Array[Float]` /
   * `Array[Double]` columns.
@@ -103,13 +102,6 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Column API: registers the expression as a temp function in the
-    * active session (same trick as [[MinHashSig.column]]) so operator
-    * code can stay `Column => Column`. */
-  def column(a: Column, b: Column): Column = {
-    val spark = SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    call_function("vec_dot", a, b)
-  }
+  def column(a: Column, b: Column): Column =
+    GraftSqlBridge.column(a, b)(exprs => DotProduct(exprs(0), exprs(1)))
 }

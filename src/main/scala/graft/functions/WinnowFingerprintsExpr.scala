@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass winnowing kernel (Schleimer-Wilkerson-Aiken, MOSS): word
@@ -125,10 +125,6 @@ case class WinnowFingerprints(child: Expression, k: Int = 4, w: Int = 4)
 }
 
 object WinnowFingerprints {
-  def column(spark: SparkSession, c: Column, k: Int = 4, w: Int = 4): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"winnow_fp_${k}_$w",
-      exprs => WinnowFingerprints(exprs.head, k, w), "scala_udf")
-    org.apache.spark.sql.functions.call_function(s"winnow_fp_${k}_$w", c)
-  }
+  def column(c: Column, k: Int = 4, w: Int = 4): Column =
+    GraftSqlBridge.column(c)(exprs => WinnowFingerprints(exprs.head, k, w))
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -116,21 +116,11 @@ object Bpe {
       .orderBy("rank").collect()
       .map(r => (r.getAs[String]("a"), r.getAs[String]("b"))))
 
-  /** `bpe_encode(text)` column: array of subword tokens. Registers a
-    * temp function carrying the codec (same registration pattern as
-    * [[graft.functions.MinHashSig]]); the registry name carries a
-    * digest of the merge table so two codecs in one session (e.g. a
-    * corpus-trained and a fixed one) never swap under each other. */
-  def encodeColumn(spark: SparkSession, codec: BpeCodec, c: Column): Column = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(codec.merges.map { case (a, b) => a + " " + b }
-        .mkString("\n").getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    val name = s"bpe_encode_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BpeEncode(exprs.head, codec), "scala_udf")
-    call_udf(name, c)
-  }
+  /** `bpe_encode(text)` column: array of subword tokens. The codec
+    * travels inside the expression, so two codecs in one session (e.g.
+    * a corpus-trained and a fixed one) never swap under each other. */
+  def encodeColumn(codec: BpeCodec, c: Column): Column =
+    GraftSqlBridge.column(c)(exprs => BpeEncode(exprs.head, codec))
 }
 
 /** Learned merge table + greedy encoder. Broadcast to executors by

@@ -32,8 +32,7 @@ object Dedup {
     * ([[graft.functions.Md5Hashing.h60]]; LlmSpec pins it against
     * [[shingleHashSql]]). */
   def shingleHash(x: Column): Column =
-    graft.functions.Md5Prefix60.column(
-      org.apache.spark.sql.SparkSession.active, x)
+    graft.functions.Md5Prefix60.column(x)
 
   /** The pre-r19 built-in-chain form of [[shingleHash]] — kept as the
     * spec's independent reference implementation. */
@@ -50,8 +49,7 @@ object Dedup {
     * occurrence-ordered distinct — value-identical INCLUDING element
     * order to [[hashedShinglesHof]] (LlmSpec pins it). */
   def hashedShingles(text: Column, k: Int = 5): Column =
-    graft.functions.HashedShingles.column(
-      org.apache.spark.sql.SparkSession.active, text, k)
+    graft.functions.HashedShingles.column(text, k)
 
   /** The pre-r19 HOF form of [[hashedShingles]] — kept as the spec's
     * independent reference implementation. */
@@ -128,8 +126,7 @@ object Dedup {
     * value-identical including duplicate, null-element and null-array
     * semantics (FunctionsSpec pins it). */
   def jaccardLong(a: Column, b: Column): Column = {
-    val inter = graft.functions.IntersectCountLong.column(
-      org.apache.spark.sql.SparkSession.active, a, b)
+    val inter = graft.functions.IntersectCountLong.column(a, b)
     inter.cast("double") / (size(a) + size(b) - inter)
   }
 
@@ -342,8 +339,7 @@ object Dedup {
       numHashes, numBands, minAgree)
     val sa = size(col("sh_a"))
     val sb = size(col("sh_b"))
-    val inter = graft.functions.IntersectCountLong.column(
-      org.apache.spark.sql.SparkSession.active, col("sh_a"), col("sh_b"))
+    val inter = graft.functions.IntersectCountLong.column(col("sh_a"), col("sh_b"))
     // persist(): the CSE barrier (the lshPairsWithCaches discipline) —
     // without it the containment expression evaluates once for the
     // threshold predicate and once for the output column
@@ -396,7 +392,7 @@ object Dedup {
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val base0 = docs.repartition(par).select(col(idCol).as("id"),
       graft.functions.MinHashShingles
-        .column(docs.sparkSession, col(textCol), numHashes).as("ms")).persist()
+        .column(col(textCol), numHashes).as("ms")).persist()
     val base = base0.select(col("id"),
       col("ms.sig").as("sig"), col("ms.sh").as("sh"))
 
@@ -492,7 +488,7 @@ object Dedup {
     val par = docs.sparkSession.sparkContext.defaultParallelism
     docs.repartition(par).select(col(idCol).as("id"),
       graft.functions.MinHashShingles
-        .column(docs.sparkSession, col(textCol), numHashes).as("ms"))
+        .column(col(textCol), numHashes).as("ms"))
       .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("sh"))
       .withColumn("bh", bandHashesLong(col("sig"), numBands, numHashes / numBands))
   }
@@ -537,7 +533,7 @@ object Dedup {
     val base = docs.repartition(sp.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
         graft.functions.MinHashShingles
-          .column(sp, col(textCol), numHashes).as("ms"))
+          .column(col(textCol), numHashes).as("ms"))
       .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("sh"))
       .withColumn("bh",
         bandHashesLong(col("sig"), numBands, numHashes / numBands))
@@ -663,7 +659,7 @@ object Dedup {
     val par = docs.sparkSession.sparkContext.defaultParallelism
     docs.repartition(par)
       .select(col(idCol), graft.functions.SimHash16
-        .column(docs.sparkSession, TextAnalysis.tokens(col(textCol))).as("simhash"))
+        .column(TextAnalysis.tokens(col(textCol))).as("simhash"))
       .groupBy("simhash")
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keeper_id"))
       .filter(col("n_docs") > 1)
@@ -1107,8 +1103,7 @@ object Dedup {
     val sp = docs.sparkSession
     val base = docs.repartition(sp.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
-        graft.functions.SimHash60.column(sp,
-          TextAnalysis.tokens(col(textCol))).as("sh"))
+        graft.functions.SimHash60.column(TextAnalysis.tokens(col(textCol))).as("sh"))
     val blocks = base.select(col("id"), col("sh"),
       explode(array((0 until 4).map(i => struct(lit(i).as("blk"),
         shiftright(col("sh"), 15 * i).bitwiseAND(lit(32767L))
@@ -1215,8 +1210,8 @@ object Dedup {
     // the split SimHash16 + SimHash60 pair digested every token twice
     val prep = docs.repartition(par).select(col(idCol).as("id"),
         graft.functions.MinHashShingles
-          .column(sp, col(textCol), 12).as("ms"),
-        graft.functions.SimHash1660.column(sp, toks).as("sh"))
+          .column(col(textCol), 12).as("ms"),
+        graft.functions.SimHash1660.column(toks).as("sh"))
       .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
         col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
       .persist()
@@ -1269,8 +1264,7 @@ object Dedup {
     val probes = g.select(col("id").as("__ia"), col("shs").as("__sa"),
         explode(sequence(lit(1), lit(snWindow - 1))).as("d"), col("gr"))
       .select(col("__ia"), col("__sa"), (col("gr") + col("d")).as("gk"))
-    val snInter = graft.functions.IntersectCountLong.column(
-      org.apache.spark.sql.SparkSession.active, col("__sa"), col("__sb"))
+    val snInter = graft.functions.IntersectCountLong.column(col("__sa"), col("__sb"))
     val snJac = snInter.cast("double") /
       (size(col("__sa")) + size(col("__sb")) - snInter).cast("double")
     val sn = probes.join(
@@ -1349,8 +1343,8 @@ object Dedup {
     // delta only)
     val prep = newDocs.repartition(par).select(col(idCol).as("id"),
         graft.functions.MinHashShingles
-          .column(sp, col(textCol), 12).as("ms"),
-        graft.functions.SimHash1660.column(sp, toks).as("sh"))
+          .column(col(textCol), 12).as("ms"),
+        graft.functions.SimHash1660.column(toks).as("sh"))
       .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
         col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
       .persist()
@@ -1577,8 +1571,7 @@ object Dedup {
     val sp = docs.sparkSession
     docs.repartition(sp.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
-        graft.functions.SimHash60.column(sp,
-          TextAnalysis.tokens(col(textCol))).as("sh"))
+        graft.functions.SimHash60.column(TextAnalysis.tokens(col(textCol))).as("sh"))
   }
 
   /** Incremental Manku simhash pairs — the paper's actual ONLINE
@@ -1648,8 +1641,7 @@ object Dedup {
         64 - java.lang.Long.numberOfLeadingZeros(math.max(1, par * 4L - 1))))
     val base = docs.repartition(par).select(col(idCol).as("id"),
         hashedShingles(col(textCol)).as("shs"),
-        graft.functions.SimHash16.column(sp,
-          TextAnalysis.tokens(col(textCol))).as("sh"))
+        graft.functions.SimHash16.column(TextAnalysis.tokens(col(textCol))).as("sh"))
       .withColumn("band", shiftright(col("sh"), 16 - bb))
     val wnd = Window.partitionBy("band").orderBy(col("sh"), col("id"))
     val ranked = base.withColumn("rn", row_number().over(wnd))
@@ -1669,8 +1661,7 @@ object Dedup {
     val cands = probes.join(
       g.select(col("gr").as("gk"), col("id").as("__ib"),
         col("shs").as("__sb")), Seq("gk"))
-    val inter = graft.functions.IntersectCountLong.column(
-      org.apache.spark.sql.SparkSession.active, col("__sa"), col("__sb"))
+    val inter = graft.functions.IntersectCountLong.column(col("__sa"), col("__sb"))
     val jac = inter.cast("double") /
       (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
     val pairs = cands
@@ -1878,8 +1869,7 @@ object Dedup {
         Seq("__ia"))
       .join(base.select(col("id").as("__ib"), col("shs").as("__sb")),
         Seq("__ib"))
-    val inter = graft.functions.SortedIntersectCount.column(sp,
-      col("__sa"), col("__sb"))
+    val inter = graft.functions.SortedIntersectCount.column(col("__sa"), col("__sb"))
     val jac = inter.cast("double") /
       (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
     val pairs = withSets.withColumn("jaccard", jac)
@@ -1900,8 +1890,7 @@ object Dedup {
     val par = sp.sparkContext.defaultParallelism
     docs.repartition(par).select(col(idCol).as("id"),
       hashedShingles(col(textCol)).as("shs"),
-      graft.functions.SimHash16.column(sp,
-        TextAnalysis.tokens(col(textCol))).as("sh"))
+      graft.functions.SimHash16.column(TextAnalysis.tokens(col(textCol))).as("sh"))
   }
 
   /** Incremental sorted-neighborhood pairs: a new batch against the
@@ -1963,8 +1952,7 @@ object Dedup {
         Seq("__ia"))
       .join(lib.select(col("id").as("__ib"), col("shs").as("__sb")),
         Seq("__ib"))
-    val inter = graft.functions.IntersectCountLong.column(
-      org.apache.spark.sql.SparkSession.active, col("__sa"), col("__sb"))
+    val inter = graft.functions.IntersectCountLong.column(col("__sa"), col("__sb"))
     val jac = inter.cast("double") /
       (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
     val pairs = withShs

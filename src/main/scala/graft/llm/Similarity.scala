@@ -1744,9 +1744,8 @@ object Similarity {
     * does for floats: quantize within probed lists only. */
   def int8TopK(queries: DataFrame, corpus: DataFrame, k: Int,
       dims: Int = 64): DataFrame = {
-    val sp = corpus.sparkSession
     def codes(df: DataFrame): DataFrame = df.select(col("vec_id"),
-      graft.functions.Int8Codes.column(sp, col("embedding"), dims).as("q8"))
+      graft.functions.Int8Codes.column(col("embedding"), dims).as("q8"))
     val q = broadcast(codes(queries)
       .select(col("vec_id").as("query_id"), col("q8").as("qc"))
       .withColumn("q_nrm", norm(col("qc"))))
@@ -2085,8 +2084,7 @@ object Similarity {
   def int8QuantStats(vectors: DataFrame, idCol: String,
       embCol: String = "embedding", dims: Int = 64): DataFrame = {
     require(dims >= 1, s"dims must be positive, got $dims")
-    val st = graft.functions.Int8Quant.column(
-      vectors.sparkSession, col(embCol), dims)
+    val st = graft.functions.Int8Quant.column(col(embCol), dims)
     vectors.select(col(idCol), st.as("__q"))
       .select(col(idCol), col("__q.scale").as("scale"),
         col("__q.mse").as("mse"),

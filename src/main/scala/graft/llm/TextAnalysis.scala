@@ -311,7 +311,7 @@ object TextAnalysis {
       idCol: String, textCol: String, n: Int = 8): org.apache.spark.sql.DataFrame = {
     def shingled(df: org.apache.spark.sql.DataFrame) =
       df.select(col(idCol), explode(graft.functions.WordShingles.column(
-        df.sparkSession, col(textCol), n, distinct = true)).as("shingle"))
+        col(textCol), n, distinct = true)).as("shingle"))
     val evalShingles = shingled(eval).select("shingle").distinct()
     shingled(corpus).join(evalShingles, Seq("shingle"))
       .groupBy(idCol)
@@ -332,7 +332,7 @@ object TextAnalysis {
       maxEvalShingles: Long = 10_000_000L): org.apache.spark.sql.DataFrame = {
     val evalShingles = eval
       .select(explode(graft.functions.WordShingles.column(
-        eval.sparkSession, col(textCol), n, distinct = true)).as("shingle"))
+        col(textCol), n, distinct = true)).as("shingle"))
       .distinct()
     // The collected set lives in one driver array, so anything past
     // Int.MaxValue - 1 can't be collected anyway; clamping keeps a
@@ -343,12 +343,9 @@ object TextAnalysis {
       return contaminatedDocs(corpus, eval, idCol, textCol, n)
     val set = new java.util.HashSet[String]()
     evalShingles.collect().foreach(r => set.add(r.getString(0)))
-    val spark = corpus.sparkSession
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shared_ngrams",
-      exprs => graft.functions.SharedNgrams(exprs.head, set, n), "scala_udf")
-    corpus.select(col(idCol),
-      call_udf("shared_ngrams", col(textCol)).as("shared_ngrams"))
+    val shared = org.apache.spark.sql.GraftSqlBridge.column(col(textCol))(
+      exprs => graft.functions.SharedNgrams(exprs.head, set, n))
+    corpus.select(col(idCol), shared.as("shared_ngrams"))
       .filter(col("shared_ngrams") > 0)
   }
 
@@ -459,8 +456,7 @@ object TextAnalysis {
       groupCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
     import graft.functions.GraftFunctions.dsum
     val counts = docs.select(col(groupCol),
-        explode(graft.functions.CharGramCounts.column(
-          docs.sparkSession, col(textCol))).as("gc"))
+        explode(graft.functions.CharGramCounts.column(col(textCol))).as("gc"))
       .groupBy(col(groupCol), col("gc.g").as("g"))
       .agg(sum(col("gc.c")).as("c"))
     val tot = counts.groupBy(col(groupCol)).agg(sum(col("c")).as("__t"))
@@ -774,8 +770,7 @@ object TextAnalysis {
     // The struct lands in its own projection so the kernel runs once
     // per row, not once per referencing output column (CollapseProject
     // refuses to inline non-cheap expressions referenced repeatedly).
-    val st = graft.functions.C4LineStats.column(
-      docs.sparkSession, col(textCol), minWords)
+    val st = graft.functions.C4LineStats.column(col(textCol), minWords)
     docs.select(col(idCol), st.as("__s")).select(
       col(idCol),
       col("__s.n_lines").cast("long").as("n_lines"),
@@ -857,8 +852,7 @@ object TextAnalysis {
   def blocklist(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String,
       patterns: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val m = graft.functions.MultiMatch.column(
-      docs.sparkSession, col(textCol), patterns)
+    val m = graft.functions.MultiMatch.column(col(textCol), patterns)
     docs.select(col(idCol), m.as("matched"))
       .select(col(idCol), col("matched"),
         size(col("matched")).cast("long").as("n_matched"),
@@ -944,10 +938,9 @@ object TextAnalysis {
     *
     * `changed` compares against the raw input (a cheap data-quality
     * metric: fraction of corpus touched by normalization). */
-  def normalizeText(spark: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame,
+  def normalizeText(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
-    val nfc = graft.functions.NfcNormalize.column(spark, col(textCol))
+    val nfc = graft.functions.NfcNormalize.column(col(textCol))
     // \x0B (vertical tab) must go in THIS step: Java \s matches it but
     // RE2 \s does not, so the collapse step may only ever see the
     // shared [\t\n\f\r ] whitespace alphabet.
@@ -974,8 +967,7 @@ object TextAnalysis {
     * the two exact counts, so it hashes cross-engine. */
   def unigramEntropy(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
-    val st = graft.functions.UnigramEntropy.column(
-      docs.sparkSession, col(textCol))
+    val st = graft.functions.UnigramEntropy.column(col(textCol))
     docs.select(col(idCol), st.as("__u"))
       .select(col(idCol),
         col("__u.n_tokens").as("n_tokens"),
@@ -1142,7 +1134,7 @@ object TextAnalysis {
       idCol: String, textCol: String, n: Int = 5): org.apache.spark.sql.DataFrame = {
     val sh = docs.select(col(idCol),
       explode(graft.functions.WordShingles.column(
-        docs.sparkSession, col(textCol), n, distinct = true)).as("shingle"))
+        col(textCol), n, distinct = true)).as("shingle"))
     val first = sh.groupBy("shingle").agg(min(col(idCol)).as("first_doc"))
     sh.join(first, Seq("shingle"))
       .groupBy(idCol).agg(
@@ -1173,7 +1165,7 @@ object TextAnalysis {
       n: Int = 3): org.apache.spark.sql.DataFrame = {
     val post = docs.select(col(groupCol).as("src"),
         explode(graft.functions.WordShingles.column(
-          docs.sparkSession, col(textCol), n, distinct = true)).as("sh"))
+          col(textCol), n, distinct = true)).as("sh"))
       .distinct()
     val sizes = post.groupBy("src").agg(count(lit(1)).as("n_sh"))
     val pairs = post.select(col("src").as("src_a"), col("sh"))
@@ -1213,17 +1205,16 @@ object TextAnalysis {
   def oovRate(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, maxN: Int = 3): org.apache.spark.sql.DataFrame = {
     require(maxN >= 1, s"maxN must be positive, got $maxN")
-    val sp = docs.sparkSession
     val isTrain = graft.llm.Corpus.split(col(idCol)) === "train"
     (1 to maxN).map { k =>
       val train = docs.filter(isTrain)
         .select(explode(graft.functions.WordShingles.column(
-          sp, col(textCol), k, distinct = true)).as("g"))
+          col(textCol), k, distinct = true)).as("g"))
         .distinct()
         .withColumn("__seen", lit(1))
       val held = docs.filter(!isTrain)
         .select(explode(graft.functions.WordShingles.column(
-          sp, col(textCol), k, distinct = false)).as("g"))
+          col(textCol), k, distinct = false)).as("g"))
       held.join(train, Seq("g"), "left")
         .agg(count(lit(1)).cast("long").as("n_held"),
           sum(when(col("__seen").isNull, 1L).otherwise(0L)).cast("long")
@@ -1344,11 +1335,10 @@ object TextAnalysis {
   def distinctN(docs: org.apache.spark.sql.DataFrame, groupCol: String,
       textCol: String, maxN: Int = 3): org.apache.spark.sql.DataFrame = {
     require(maxN >= 1, s"maxN must be positive, got $maxN")
-    val sp = docs.sparkSession
     (1 to maxN).map { k =>
       docs.select(col(groupCol),
           explode(graft.functions.WordShingles.column(
-            sp, col(textCol), k, distinct = false)).as("g"))
+            col(textCol), k, distinct = false)).as("g"))
         .groupBy(col(groupCol), col("g"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col(groupCol))
@@ -2073,8 +2063,7 @@ object TextAnalysis {
       idCol: String, textCol: String, k: Int = 4,
       w: Int = 4): org.apache.spark.sql.DataFrame = {
     require(k >= 1 && w >= 1, s"k and w must be positive, got k=$k w=$w")
-    val st = graft.functions.WinnowFingerprints.column(
-      docs.sparkSession, col(textCol), k, w)
+    val st = graft.functions.WinnowFingerprints.column(col(textCol), k, w)
     docs.select(col(idCol), st.as("__wf"))
       .select(col(idCol),
         col("__wf.n_grams").as("n_grams"),
@@ -2134,8 +2123,7 @@ object TextAnalysis {
       textCol: String, w: Int = 20): org.apache.spark.sql.DataFrame = {
     require(w >= 1, s"window width must be positive, got $w")
     val n = tokenCount(col(textCol))
-    val sumCol = graft.functions.MattrSum.column(
-      docs.sparkSession, col(textCol), w)
+    val sumCol = graft.functions.MattrSum.column(col(textCol), w)
     docs.select(col(idCol), n.as("n_tokens"), sumCol.as("mattr_sum"))
       .withColumn("n_windows",
         greatest(col("n_tokens") - w + 1, lit(1L)))

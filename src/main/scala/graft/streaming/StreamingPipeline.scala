@@ -137,7 +137,7 @@ object StreamingPipeline {
     val sh = readCommitted(spark, corpusDir)
       .select(col("epoch"),
         explode(graft.functions.WordShingles.column(
-          spark, col("clean_text"), n, distinct = true)).as("shingle"))
+          col("clean_text"), n, distinct = true)).as("shingle"))
       .distinct()
     val first = sh.groupBy("shingle").agg(min(col("epoch")).as("first_epoch"))
     sh.join(first, Seq("shingle"))
@@ -697,8 +697,8 @@ object StreamingPipeline {
     val toks = TextAnalysis.tokens(col("clean_text"))
     val prep = cleaned.repartition(par).select(col("doc_id").as("id"),
         graft.functions.MinHashShingles
-          .column(spark, col("clean_text"), 12).as("ms"),
-        graft.functions.SimHash1660.column(spark, toks).as("sh"))
+          .column(col("clean_text"), 12).as("ms"),
+        graft.functions.SimHash1660.column(toks).as("sh"))
       .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
         col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
       .persist()

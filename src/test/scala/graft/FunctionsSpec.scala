@@ -150,7 +150,7 @@ class FunctionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val df = Seq(("martha", "marhta"), ("ab", "ba"), ("x", "x"))
       .toDF("a", "b")
-    val got = df.select(graft.functions.JaroWinkler.column(spark,
+    val got = df.select(graft.functions.JaroWinkler.column(
       col("a"), col("b"))).collect().map(_.getDouble(0)).toSeq
     assert(got == Seq(0.9611111111111111, 0.0, 1.0))
   }
@@ -171,9 +171,9 @@ class FunctionsSpec extends AnyFunSuite {
         array_distinct(col("a")).as("ad"), array_distinct(col("b")).as("bd"))
     val out = df.select(
       size(array_intersect(col("a"), col("b"))).cast("long").as("ref"),
-      graft.functions.IntersectCountLong.column(spark, col("a"), col("b")).as("nat"),
+      graft.functions.IntersectCountLong.column(col("a"), col("b")).as("nat"),
       size(array_intersect(col("ad"), col("bd"))).cast("long").as("refd"),
-      graft.functions.IntersectCountLong.column(spark, col("ad"), col("bd")).as("natd"))
+      graft.functions.IntersectCountLong.column(col("ad"), col("bd")).as("natd"))
       .collect()
     out.foreach { r =>
       assert(r.getLong(0) == r.getLong(1), r.toString)
@@ -185,16 +185,78 @@ class FunctionsSpec extends AnyFunSuite {
       .toDF("a", "b")
       .select(
         size(array_intersect(col("a"), col("b"))).cast("long").as("ref"),
-        graft.functions.IntersectCountLong.column(spark, col("a"), col("b")).as("nat"))
+        graft.functions.IntersectCountLong.column(col("a"), col("b")).as("nat"))
       .collect()
     e.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
     // null array -> null, matching size(array_intersect)=null semantics
     val n = Seq(Tuple1(Seq(1L))).toDF("a")
       .select(
         size(array_intersect(col("a"), lit(null).cast("array<long>"))).as("ref"),
-        graft.functions.IntersectCountLong.column(spark, col("a"),
+        graft.functions.IntersectCountLong.column(col("a"),
           lit(null).cast("array<long>")).as("nat"))
       .collect()(0)
     assert(n.isNullAt(0) && n.isNullAt(1))
+  }
+
+  test("kernel columns built on a future's thread work on another session's frame") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import org.apache.spark.sql.functions._
+    import graft.llm.Dedup
+    val other = TestSpark.spark.newSession()
+    // the incrementalBlockedDedupPairsFromArtifacts shape: columns are
+    // built on an ExecutionContext.global thread, whose active session
+    // is not the session that owns the frame
+    val cols = Await.result(Future {
+      Seq(Dedup.shingleHash(col("a")).as("h"),
+        Dedup.jaccardLong(Dedup.hashedShingles(col("a")),
+          Dedup.hashedShingles(col("b"))).as("j"),
+        graft.functions.MultiMatch.column(col("a"), Seq("fox")).as("m"))
+    }, Duration.Inf)
+    import other.implicits._
+    val r = Seq(("the quick brown fox", "the quick brown fox"))
+      .toDF("a", "b").select(cols: _*).collect()(0)
+    assert(r.getLong(0) == graft.functions.Md5Hashing.h60Of(
+      org.apache.spark.unsafe.types.UTF8String.fromString("the quick brown fox")))
+    assert(r.getDouble(1) == 1.0)
+    assert(r.getSeq[Int](2) == Seq(0))
+  }
+
+  test("building BloomProbe, MultiMatch and Bpe columns leaves the function registry as it was") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.llm.{Bpe, BloomFilter, BpeCodec}
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.listFunction().size
+    val docs = Seq((1L, "lower newest widest"), (2L, "low lowest"))
+      .toDF("id", "text")
+    for ((key, pattern, merge) <- Seq(("low", "est", ("l", "o")),
+        ("new", "wid", ("e", "s")))) {
+      val sketch = BloomFilter.build(Seq(key).toDF("k"), col("k"), 3, 1 << 10)
+      val hits = BloomFilter.mightContain(sketch,
+        Seq((1L, key), (2L, key + "x")).toDF("id", "k"), "id", col("k"), 3, 1 << 10)
+        .orderBy("id").collect().map(_.getBoolean(1))
+      assert(hits(0), s"bloom probe must find its own key $key")
+      val matched = docs.select(
+        graft.functions.MultiMatch.column(col("text"), Seq(pattern)).as("m"),
+        Bpe.encodeColumn(new BpeCodec(Array(merge)), col("text")).as("t"))
+        .collect()
+      assert(matched.map(_.getSeq[Int](0).size).sum > 0)
+      assert(matched.forall(_.getSeq[String](1).nonEmpty))
+    }
+    assert(registry.listFunction().size == before)
+  }
+
+  test("intersect_count_long rejects array<int> inputs at analysis") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val df = Seq((Seq(1, 2, 3), Seq(2, 3, 4))).toDF("a", "b")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(graft.functions.IntersectCountLong.column(col("a"), col("b")))
+        .collect()
+    }
   }
 }

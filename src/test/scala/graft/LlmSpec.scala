@@ -72,7 +72,7 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val viaExpr = df
       .select(col("doc_id"),
-        concat_ws(",", graft.functions.MinHashSig.column(spark, col("text"), 12)).as("sig"))
+        concat_ws(",", graft.functions.MinHashSig.column(col("text"), 12)).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(viaColumn == viaBulk)
     assert(viaColumn == viaExpr)
@@ -112,7 +112,7 @@ class LlmSpec extends AnyFunSuite {
     val both = docs.select(
       Dedup.simhash16(col("text")).as("hof"),
       graft.functions.SimHash16
-        .column(spark, TextAnalysis.tokens(col("text"))).as("nat"))
+        .column(TextAnalysis.tokens(col("text"))).as("nat"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
@@ -158,9 +158,9 @@ class LlmSpec extends AnyFunSuite {
     for (df <- Seq(docs.select(col("doc_id"), col("text")), edge)) {
       val toks = TextAnalysis.tokens(col("text"))
       val both = df.select(
-        graft.functions.SimHash16.column(spark, toks).as("s16"),
-        graft.functions.SimHash60.column(spark, toks).as("s60"),
-        graft.functions.SimHash1660.column(spark, toks).as("c"))
+        graft.functions.SimHash16.column(toks).as("s16"),
+        graft.functions.SimHash60.column(toks).as("s60"),
+        graft.functions.SimHash1660.column(toks).as("c"))
         .select(col("s16"), col("s60"), col("c.sh16"), col("c.sh60"))
         .collect()
       assert(both.nonEmpty)
@@ -265,7 +265,7 @@ class LlmSpec extends AnyFunSuite {
       Dedup.jaccard(Dedup.shingles(col("a")), Dedup.shingles(col("b"))).as("j"))
       .collect().map(_.getDouble(0))
     val viaExpr = df.select(
-      graft.functions.JaccardShingles.column(spark, col("a"), col("b")).as("j"))
+      graft.functions.JaccardShingles.column(col("a"), col("b")).as("j"))
       .collect().map(_.getDouble(0))
     assert(viaArrays.sameElements(viaExpr),
       s"${viaArrays.toSeq} != ${viaExpr.toSeq}")
@@ -1659,7 +1659,7 @@ class LlmSpec extends AnyFunSuite {
     // C0/VT/DEL controls vanish; runs of whitespace collapse
     val messy = "é が  ạ́\tx\u0007y\u000Bz\u007F ﬁ "
     val out = graft.llm.TextAnalysis.normalizeText(
-      spark, Seq((1L, messy), (2L, "plain ascii"), (3L, null: String))
+      Seq((1L, messy), (2L, "plain ascii"), (3L, null: String))
         .toDF("doc_id", "text"), "doc_id", "text")
       .orderBy("doc_id").collect()
     val norm = out(0).getAs[String]("norm_text")
@@ -1678,7 +1678,7 @@ class LlmSpec extends AnyFunSuite {
     assert(graft.functions.NfcNormalizeHelper.normalize(nonAscii).toString == "é")
     // scan rider: narrow map, no exchange anywhere in the plan
     val plan = graft.llm.TextAnalysis.normalizeText(
-      spark, docs, "doc_id", "text").queryExecution.executedPlan.toString
+      docs, "doc_id", "text").queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), "normalizeText must be zero-shuffle")
     assert(plan.contains("*("), "normalizeText must stay in whole-stage codegen")
   }
@@ -2749,7 +2749,7 @@ class LlmSpec extends AnyFunSuite {
     // guarantee is exact, not probabilistic), none beyond it, and
     // reported distances match
     val sh = d.select(col("doc_id"), graft.functions.SimHash60.column(
-        spark, TextAnalysis.tokens(col("text"))).as("sh"))
+        TextAnalysis.tokens(col("text"))).as("sh"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val want = (for {
       (ia, sa) <- sh; (ib, sb) <- sh if ia < ib
@@ -3629,7 +3629,7 @@ class LlmSpec extends AnyFunSuite {
     val d = Seq((1L, Seq(1.0f, -2.0f, 4.0f, 0.5f)),
       (2L, Seq(0.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     val cs = d.orderBy("vec_id").select(
-      graft.functions.Int8Codes.column(spark, col("embedding"), 4))
+      graft.functions.Int8Codes.column(col("embedding"), 4))
       .collect().map(_.getSeq[Double](0))
     assert(cs(0) == Seq(32.0, -63.0, 127.0, 16.0))
     assert(cs(1) == Seq(0.0, 0.0, 0.0, 0.0), "zero vector -> zero codes")

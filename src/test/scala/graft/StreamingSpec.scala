@@ -957,8 +957,35 @@ class StreamingSpec extends AnyFunSuite {
     // additivity: per-epoch n_new sums to the corpus's distinct count
     val total = StreamingPipeline.readCorpus(spark, corpus)
       .select(explode(graft.functions.WordShingles.column(
-        spark, col("clean_text"), 5, distinct = true)).as("s"))
+        col("clean_text"), 5, distinct = true)).as("s"))
       .distinct().count()
     assert(nov.values.map(_._2).sum == total)
+  }
+
+  test("blocked corpus ingest on a fresh session: the second drain verifies against the non-empty store") {
+    // No batch dedup call runs on this session first: the drain's
+    // verify kernels must resolve without anything registered on it
+    // (by-name kernels failed here with UNRESOLVED_ROUTINE).
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val base = Files.createTempDirectory("graft-blocked-fresh").toString
+    val landing = s"$base/landing"
+    val Seq(corpus, sigs, sks, fps, prs) =
+      Seq("corpus", "sigs", "sks", "fps", "pairs").map(d => s"$base/$d")
+    val text1 = "the quick brown fox jumps over fences.\nmorning rain fell on the quiet harbor town!\nseven sailors counted stars above deck?"
+    val text2 = "bakers knead dough before sunrise daily.\ncopper kettles whistle in the old kitchen!\nchildren chase autumn leaves down lanes?"
+    val text3 = "glaciers carve valleys over countless years.\nlibraries hold voices from distant ages!\ngardeners plant tulips beside stone walls?"
+    def land(rows: Seq[(Long, String, String)]): Unit = {
+      rows.toDF("doc_id", "text", "source").write.mode("append").parquet(landing)
+      val q = StreamingPipeline.startBlockedCorpusIngest(fresh, landing,
+        corpus, sigs, sks, fps, prs, s"$base/cp", Map("keep" -> 1.0))
+      assert(q.awaitTermination(120000), "AvailableNow drain timed out")
+    }
+    land(Seq((1L, text1, "keep"), (2L, text2, "keep")))
+    land(Seq((10L, text1, "keep"), (11L, text3, "keep")))
+    assert(StreamingPipeline.readCorpus(fresh, corpus).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 11L))
+    assert(StreamingPipeline.readPairs(fresh, prs, sigs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).contains((1L, 10L)))
   }
 }
