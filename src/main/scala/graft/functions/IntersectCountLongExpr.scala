@@ -11,10 +11,13 @@ import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
   * of DISTINCT common elements, plus one if both sides contain a null
   * element, null if either array is null — without array_intersect's
   * per-row boxed hash set or the materialized intersection array.
-  * Unlike [[SortedIntersectCount]] it carries NO sortedness contract:
-  * both sides are copied into thread-local buffers, sorted and
-  * distinct-merge-walked (two primitive sorts of request-sized arrays,
-  * zero per-row allocation).
+  * It carries NO sortedness contract. When both sides are strictly
+  * ascending and null-free (checked here, in one allocation-free pass
+  * per side — the set-similarity join's `array_sort`ed sets) it is a
+  * single merge pass over the arrays as they are. Any other input is
+  * copied into thread-local buffers, sorted and distinct-merge-walked
+  * (two primitive sorts of request-sized arrays, zero per-row
+  * allocation).
   *
   * This is the exact-verification kernel of every candidate-pair
   * blocker (LSH, sorted-neighborhood, b-bit, the composed three-
@@ -49,7 +52,41 @@ object IntersectCountLongHelper {
     (buf, m, hasNull)
   }
 
-  def count(a: ArrayData, b: ArrayData): Long = {
+  /** Null-free and strictly ascending: a single pass, stopping at the
+    * first null or non-increasing element. */
+  private def strictlyAscending(a: ArrayData): Boolean = {
+    val n = a.numElements()
+    var i = 0
+    var ok = true
+    while (ok && i < n) {
+      ok = !a.isNullAt(i) && (i == 0 || a.getLong(i - 1) < a.getLong(i))
+      i += 1
+    }
+    ok
+  }
+
+  /** Merge count of two strictly ascending, null-free arrays. */
+  private def mergeCount(a: ArrayData, b: ArrayData): Long = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var c = 0L
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x == y) { c += 1L; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    c
+  }
+
+  def count(a: ArrayData, b: ArrayData): Long =
+    if (strictlyAscending(a) && strictlyAscending(b)) mergeCount(a, b)
+    else sortedCount(a, b)
+
+  private def sortedCount(a: ArrayData, b: ArrayData): Long = {
     val (xa, na, nullA) = fill(a, BufA)
     val (xb, nb, nullB) = fill(b, BufB)
     var i = 0

@@ -343,9 +343,7 @@ object Dedup {
     // persist(): the CSE barrier (the lshPairsWithCaches discipline) —
     // without it the containment expression evaluates once for the
     // threshold predicate and once for the output column
-    val sc = cand
-      .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+    val sc = withSides(cand, base, ("id_a", "id_b"), "sh" -> ("sh_a", "sh_b"))
       .select(
         when(sa <= sb, col("id_a")).otherwise(col("id_b")).as("contained_id"),
         when(sa <= sb, col("id_b")).otherwise(col("id_a")).as("container_id"),
@@ -396,37 +394,52 @@ object Dedup {
     val base = base0.select(col("id"),
       col("ms.sig").as("sig"), col("ms.sh").as("sh"))
 
-    // Candidate generation WITHOUT a distinct: each colliding pair is
-    // emitted exactly once, at its FIRST agreeing band — the classic
-    // dedup-by-construction trick. The signature rides the band join
-    // (12 longs ≪ the shingle set), so the agreement prefilter runs
-    // directly on the join output: no candidate distinct, no
-    // sig-attach joins — one shuffle where the textbook pipeline
-    // spends four.
-    val banded = base.select(col("id"), col("sig"),
-      bandHashesLong(col("sig"), numBands, numHashes / numBands).as("bh"))
+    (lshBandCandidates(base, numBands, numHashes / numBands, minAgree),
+      base, base0)
+  }
+
+  /** The minhash-LSH candidate builder over an (id, sig) frame:
+    * canonical (id_a < id_b) pairs that share a band key and pass the
+    * signature-agreement prefilter. No distinct: each colliding pair
+    * is emitted exactly once, at its FIRST agreeing band — the classic
+    * dedup-by-construction trick. The signature rides the band join
+    * (12 longs ≪ the shingle set), so the prefilter runs directly on
+    * the join output: no candidate distinct, no sig-attach joins — one
+    * shuffle where the textbook pipeline spends four. */
+  private def lshBandCandidates(sigs: DataFrame, numBands: Int,
+      rowsPerBand: Int, minAgree: Int): DataFrame = {
+    val banded = sigs.select(col("id"), col("sig"),
+      bandHashesLong(col("sig"), numBands, rowsPerBand).as("bh"))
       .select(col("id"), col("sig"), col("bh"),
         posexplode(col("bh")).as(Seq("band_idx", "band_hash")))
-    val prefiltered = banded
+    banded
       .select(col("band_idx"), col("band_hash"), col("id").as("id_a"),
         col("sig").as("sig_a"), col("bh").as("bh_a"))
       .join(banded.select(col("band_idx"), col("band_hash"), col("id").as("id_b"),
         col("sig").as("sig_b"), col("bh").as("bh_b")),
         Seq("band_idx", "band_hash"))
       .filter(col("id_a") < col("id_b"))
-      // first agreeing band only: no earlier band index matches
-      .filter(size(filter(zip_with(
-        slice(col("bh_a"), lit(1), col("band_idx")),
-        slice(col("bh_b"), lit(1), col("band_idx")),
-        (x, y) => x === y), p => p)) === 0)
-      // ≥ minAgree of numHashes signature components must agree (12
-      // long compares) before the expensive exact Jaccard (array
-      // intersection over hundreds of elements) runs per candidate
-      .filter(size(filter(zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => x === y), p => p)) >= minAgree)
+      .filter(firstAgreeingBand)
+      .filter(sigsAgree(minAgree))
       .select("id_a", "id_b")
-    (prefiltered, base, base0)
   }
+
+  /** Band-join dedup predicate over (band_idx, bh_a, bh_b): no band
+    * index before `band_idx` agrees, so a pair colliding in several
+    * bands survives only at its first. */
+  private def firstAgreeingBand: Column =
+    size(filter(zip_with(
+      slice(col("bh_a"), lit(1), col("band_idx")),
+      slice(col("bh_b"), lit(1), col("band_idx")),
+      (x, y) => x === y), p => p)) === 0
+
+  /** Signature prefilter over (sig_a, sig_b): ≥ minAgree of the
+    * numHashes components agree (12 long compares) before the
+    * expensive exact Jaccard (array intersection over hundreds of
+    * elements) runs per candidate. */
+  private def sigsAgree(minAgree: Int): Column =
+    size(filter(zip_with(col("sig_a"), col("sig_b"),
+      (x, y) => x === y), p => p)) >= minAgree
 
   private def lshPairsWithCaches(docs: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int, numBands: Int,
@@ -454,11 +467,22 @@ object Dedup {
     * id-pair-sized shuffle, the same floor rule the digest stages
     * use. */
   private def scored(prefiltered: DataFrame, base: DataFrame): DataFrame =
-    prefiltered
-      .repartition(prefiltered.sparkSession.sparkContext.defaultParallelism)
-      .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+    withSides(prefiltered
+        .repartition(prefiltered.sparkSession.sparkContext.defaultParallelism),
+      base, ("id_a", "id_b"), "sh" -> ("sh_a", "sh_b"))
       .select(col("id_a"), col("id_b"), jaccardLong(col("sh_a"), col("sh_b")).as("jaccard"))
+
+  /** The verify stage's set fetch: attaches both sides of a pair
+    * frame (id columns `ids`) from the id-keyed `table` by two id
+    * joins, each `table` column renamed to its (side a, side b) pair
+    * of names. */
+  private def withSides(pairs: DataFrame, table: DataFrame,
+      ids: (String, String), cols: (String, (String, String))*): DataFrame = {
+    def side(id: String, name: ((String, String)) => String) =
+      table.select(col("id").as(id) +: cols.map { case (c, ab) => col(c).as(name(ab)) }: _*)
+    pairs.join(side(ids._1, _._1), Seq(ids._1))
+      .join(side(ids._2, _._2), Seq(ids._2))
+  }
 
   /** Opt-in eager materialization for long-lived sessions: compute the
     * (small) verified-pair artifact in one action, then release every
@@ -470,14 +494,9 @@ object Dedup {
     * die with their executor. Default callers skip all of this: the
     * lazy plan is both faster and loss-tolerant. */
   private def materializeAndRelease(result: DataFrame,
-      checkpointDir: Option[String], caches: Seq[DataFrame]): DataFrame = {
-    val sc = result.sparkSession.sparkContext
-    try checkpointDir match {
-      case Some(dir) =>
-        Lineage.withCheckpointDir(sc, dir)(result.checkpoint(eager = true))
-      case None => result.localCheckpoint(true)
-    } finally caches.foreach(_.unpersist(blocking = false))
-  }
+      checkpointDir: Option[String], caches: Seq[DataFrame]): DataFrame =
+    try pin(result, checkpointDir)
+    finally caches.foreach(_.unpersist(blocking = false))
 
   /** Signature table for INCREMENTAL dedup: (id, sig, sh, bh) per doc —
     * the artifact a production pipeline persists (bucketed by band
@@ -530,13 +549,7 @@ object Dedup {
     val sp = docs.sparkSession
     val modulus = 1L << b
     val c = 1.0 / modulus.toDouble
-    val base = docs.repartition(sp.sparkContext.defaultParallelism)
-      .select(col(idCol).as("id"),
-        graft.functions.MinHashShingles
-          .column(col(textCol), numHashes).as("ms"))
-      .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("sh"))
-      .withColumn("bh",
-        bandHashesLong(col("sig"), numBands, numHashes / numBands))
+    val base = signatureTable(docs, idCol, textCol, numHashes, numBands)
       .persist()
     val bands = base.select(col("id"),
       posexplode(col("bh")).as(Seq("band_idx", "band_hash")))
@@ -550,16 +563,13 @@ object Dedup {
       // 16 B/pair candidates coalesce to 1-2 partitions under
       // byte-based AQE and serialize the agree+jaccard kernels
       .repartition(sp.sparkContext.defaultParallelism)
-    val withSides = pairs
-      .join(base.select(col("id").as("id_a"), col("sig").as("__sa"),
-        col("sh").as("__ha")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("sig").as("__sb"),
-        col("sh").as("__hb")), Seq("id_b"))
+    val sides = withSides(pairs, base, ("id_a", "id_b"),
+      "sig" -> ("__sa", "__sb"), "sh" -> ("__ha", "__hb"))
     val agree = size(filter(zip_with(col("__sa"), col("__sb"),
       (x, y) => pmod(x, lit(modulus)) === pmod(y, lit(modulus))),
       p => p)).cast("long")
     val pHat = col("n_agree").cast("double") / lit(numHashes.toDouble)
-    val result = withSides
+    val result = sides
       .withColumn("n_agree", agree)
       .select(col("id_a"), col("id_b"), col("n_agree"),
         ((pHat - lit(c)) / (lit(1.0) - lit(c))).as("j_bbit_est"),
@@ -607,12 +617,8 @@ object Dedup {
         when(col("id_x") < col("id_y"), col("sig_x")).otherwise(col("sig_y")).as("sig_a"),
         when(col("id_x") < col("id_y"), col("sig_y")).otherwise(col("sig_x")).as("sig_b"),
         (col("id_x") < col("id_y")).as("__probed_by_a"))
-      .filter(size(filter(zip_with(
-        slice(col("bh_a"), lit(1), col("band_idx")),
-        slice(col("bh_b"), lit(1), col("band_idx")),
-        (x, y) => x === y), p => p)) === 0)
-      .filter(size(filter(zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => x === y), p => p)) >= minAgree)
+      .filter(firstAgreeingBand)
+      .filter(sigsAgree(minAgree))
       // new×new pairs collide from BOTH probes — keep one; new×old
       // pairs appear once (only the new side probes)
       .join(newIds, col("id_a") === col("__new_id"), "left")
@@ -1053,28 +1059,6 @@ object Dedup {
     }.reduce(_.union(_))
   }
 
-  /** Sorted-neighborhood near-dup pairs (Hernández & Stolfo 1995, the
-    * OTHER classic dedup blocking beside LSH bands): sort the corpus
-    * by a locality key — the 16-bit simhash, so similar texts land
-    * adjacent — and verify exact shingle jaccard only between docs
-    * within `window` positions of each other in that order. Finds a
-    * different recall profile than minhash-LSH (simhash locality is
-    * weighted-token-set, LSH bands are shingle-set sample agreement),
-    * which is why production dedup stacks run both and union the
-    * pairs.
-    *
-    * Scale shape: the GLOBAL sort order is realized WITHOUT a global
-    * sort — the two-level banded rank (within-band `row_number` on
-    * the band shuffle + a 2^bandBits-row broadcast offset table,
-    * the budgetSelect construction). Candidates are the exact global
-    * (rank, rank+d) adjacencies for d < window, produced by a keyed
-    * equi-join on the rank (each row explodes into window−1 probe
-    * keys — O(n·window) candidate stream, never n²). Verification
-    * intersects each doc's PRECOMPUTED hashed shingle set
-    * ([[hashedShingles]]) — shingling runs once per doc, not
-    * 2·(window−1) times per doc as a per-pair re-shingle would, and
-    * the long arrays shuffle ~10× cheaper than the texts they
-    * replace (measured 4.78 → 0.64 s min at sf0.1, window 4). */
   /** Manku-Jain-Das Sarma simhash near-dup pairs (WWW'07 — "Detecting
     * near-duplicates for web crawling", the algorithm behind Google's
     * crawl dedup): 60-bit SimHash per document, split into 4 disjoint
@@ -1098,30 +1082,45 @@ object Dedup {
     * verifying duplicates). */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
+    requireHamming(maxHamming)
+    hammingVerified(simhashSelfCandidates(
+      simhashBlocks(simhashTable(docs, idCol, textCol))), maxHamming)
+  }
+
+  private def requireHamming(maxHamming: Int): Unit =
     require(maxHamming >= 0 && maxHamming <= 3,
       s"pigeonhole with 4 blocks certifies maxHamming <= 3, got $maxHamming")
-    val sp = docs.sparkSession
-    val base = docs.repartition(sp.sparkContext.defaultParallelism)
-      .select(col(idCol).as("id"),
-        graft.functions.SimHash60.column(TextAnalysis.tokens(col(textCol))).as("sh"))
-    val blocks = base.select(col("id"), col("sh"),
-      explode(array((0 until 4).map(i => struct(lit(i).as("blk"),
-        shiftright(col("sh"), 15 * i).bitwiseAND(lit(32767L))
-          .as("bval"))): _*)).as("__b"))
+
+  /** The Manku block explode of a frame carrying `id` and a 60-bit
+    * fingerprint column `fp`: one (id, sh, blk, bval) row per disjoint
+    * 15-bit block. */
+  private def simhashBlocks(fps: DataFrame, fp: String = "sh"): DataFrame =
+    fps.select(col("id"), col(fp).as("sh"),
+        explode(array((0 until 4).map(i => struct(lit(i).as("blk"),
+          shiftright(col(fp), 15 * i).bitwiseAND(lit(32767L))
+            .as("bval"))): _*)).as("__b"))
       .select(col("id"), col("sh"), col("__b.blk").as("blk"),
         col("__b.bval").as("bval"))
-    val cands = blocks.as("a").join(blocks.as("b"),
+
+  /** Block self-join candidates: canonical (id_a < id_b) pairs that
+    * agree on at least one block, with both fingerprints (__sa, __sb),
+    * distinct-ed so a pair agreeing on several blocks verifies once. */
+  private def simhashSelfCandidates(blocks: DataFrame): DataFrame =
+    blocks.as("a").join(blocks.as("b"),
         col("a.blk") === col("b.blk") && col("a.bval") === col("b.bval") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.sh").as("__sa"), col("b.sh").as("__sb"))
       .distinct()
+
+  /** The simhash verify: (id_a, id_b, __sa, __sb) candidates →
+    * (id_a, id_b, hamming) within `maxHamming`. */
+  private def hammingVerified(cands: DataFrame, maxHamming: Int): DataFrame =
     cands
       .withColumn("hamming",
         bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-  }
 
   /** The COMPOSED production dedup pipeline: all three blockers the
     * engine ships — minhash-LSH ([[lshPairs]], shingle-set-sample
@@ -1190,112 +1189,61 @@ object Dedup {
   private def blockedPairsWithCaches(docs: DataFrame, idCol: String,
       textCol: String, lshThreshold: Double, snWindow: Int,
       snThreshold: Double, maxHamming: Int): (DataFrame, Seq[DataFrame]) = {
-    require(snWindow >= 2, s"window must be >= 2, got $snWindow")
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"pigeonhole with 4 blocks certifies maxHamming <= 3, got $maxHamming")
-    val sp = docs.sparkSession
-    val par = sp.sparkContext.defaultParallelism
+    requireWindow(snWindow)
+    requireHamming(maxHamming)
     // ONE corpus scan computes every fingerprint the three blockers
-    // need — minhash sigs + hashed shingle sets (LSH candidates and
-    // BOTH jaccard verifies), the 16-bit simhash sort key, the 60-bit
-    // simhash blocks — where calling the three public functions
-    // back-to-back scans and re-digests the text three times. At
-    // 100 TB that is the difference between one pass over the corpus
-    // and three; the candidate constructions below are verbatim
-    // replicas of lshPairs / sortedNeighborPairs / simhashPairs over
-    // the shared prep (LlmSpec pins exact pair-set equality with the
-    // three public functions, so the replicas cannot drift).
-    val toks = graft.llm.TextAnalysis.tokens(col(textCol))
-    // ONE digest per token for BOTH simhash widths (SimHash1660, r19):
-    // the split SimHash16 + SimHash60 pair digested every token twice
-    val prep = docs.repartition(par).select(col(idCol).as("id"),
-        graft.functions.MinHashShingles
-          .column(col(textCol), 12).as("ms"),
-        graft.functions.SimHash1660.column(toks).as("sh"))
-      .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-        col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
-      .persist()
-
-    // --- LSH blocker (the lshCandidatesWithCaches construction) ---
-    val bandedL = prep.select(col("id"), col("sig"),
-        bandHashesLong(col("sig"), 4, 3).as("bh"))
-      .select(col("id"), col("sig"), col("bh"),
-        posexplode(col("bh")).as(Seq("band_idx", "band_hash")))
-    val lshCand = bandedL
-      .select(col("band_idx"), col("band_hash"), col("id").as("id_a"),
-        col("sig").as("sig_a"), col("bh").as("bh_a"))
-      .join(bandedL.select(col("band_idx"), col("band_hash"),
-        col("id").as("id_b"), col("sig").as("sig_b"), col("bh").as("bh_b")),
-        Seq("band_idx", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(size(filter(zip_with(
-        slice(col("bh_a"), lit(1), col("band_idx")),
-        slice(col("bh_b"), lit(1), col("band_idx")),
-        (x, y) => x === y), p => p)) === 0)
-      .filter(size(filter(zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => x === y), p => p)) >= 6)
-      .select("id_a", "id_b")
-      // parallelism floor before the verify (the `scored` rule, r19)
-      .repartition(par)
-    val lsh = lshCand
-      .join(prep.select(col("id").as("id_a"), col("shs").as("sh_a")),
-        Seq("id_a"))
-      .join(prep.select(col("id").as("id_b"), col("shs").as("sh_b")),
-        Seq("id_b"))
-      .filter(jaccardLong(col("sh_a"), col("sh_b")) >= lshThreshold)
+    // need, where calling the three public functions back-to-back
+    // scans and re-digests the text three times. At 100 TB that is the
+    // difference between one pass over the corpus and three. Each
+    // blocker below is the same builder its public function runs, over
+    // the shared prep (LlmSpec "blockedDedupPairs: the pair set is
+    // exactly lshPairs ∪ sortedNeighborPairs ∪ simhashPairs" pins the
+    // union pair for pair).
+    val prep = fingerprintPrep(docs, idCol, textCol).persist()
+    val lsh = scored(lshBandCandidates(prep, 4, 3, 6),
+        prep.select(col("id"), col("shs").as("sh")))
+      .filter(col("jaccard") >= lshThreshold)
       .select(col("id_a"), col("id_b"))
-
-    // --- sorted-neighborhood blocker (the sortedNeighborPairs
-    //     two-level-rank construction, parallelism-derived bands) ---
-    val bb = math.min(16, math.max(8,
-      64 - java.lang.Long.numberOfLeadingZeros(math.max(1, par * 4L - 1))))
-    val ranked = prep.select(col("id"), col("shs"), col("sh16").as("sh"))
-      .withColumn("band", shiftright(col("sh"), 16 - bb))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("band").orderBy(col("sh"), col("id"))))
-    val offs = ranked.groupBy("band").agg(count(lit(1)).as("bc"))
-      .withColumn("off", coalesce(sum(col("bc")).over(
-        Window.orderBy("band")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("band"), col("off"))
-    val g = ranked.join(broadcast(offs), Seq("band"))
-      .select(col("id"), col("shs"), (col("off") + col("rn")).as("gr"))
+    val g = globalRank(prep.select(col("id"), col("shs"), col("sh16").as("sh")),
+      snBandBits(0, docs.sparkSession.sparkContext.defaultParallelism), "shs")
       .persist()
-    val probes = g.select(col("id").as("__ia"), col("shs").as("__sa"),
-        explode(sequence(lit(1), lit(snWindow - 1))).as("d"), col("gr"))
-      .select(col("__ia"), col("__sa"), (col("gr") + col("d")).as("gk"))
-    val snInter = graft.functions.IntersectCountLong.column(col("__sa"), col("__sb"))
-    val snJac = snInter.cast("double") /
-      (size(col("__sa")) + size(col("__sb")) - snInter).cast("double")
-    val sn = probes.join(
-        g.select(col("gr").as("gk"), col("id").as("__ib"),
-          col("shs").as("__sb")), Seq("gk"))
-      .withColumn("jaccard", snJac)
-      .filter(col("jaccard") >= snThreshold)
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"))
-
-    // --- simhash blocker (the simhashPairs pigeonhole blocks) ---
-    val blocks = prep.select(col("id"), col("sh60").as("sh"),
-        explode(array((0 until 4).map(i => struct(lit(i).as("blk"),
-          shiftright(col("sh60"), 15 * i).bitwiseAND(lit(32767L))
-            .as("bval"))): _*)).as("__b"))
-      .select(col("id"), col("sh"), col("__b.blk").as("blk"),
-        col("__b.bval").as("bval"))
-    val sim = blocks.as("a").join(blocks.as("b"),
-        col("a.blk") === col("b.blk") && col("a.bval") === col("b.bval") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sh").as("__sa60"), col("b.sh").as("__sb60"))
-      .distinct()
-      .filter(bit_count(col("__sa60").bitwiseXOR(col("__sb60")))
-        .cast("long") <= maxHamming)
+    val sn = snVerified(windowCandidates(g, snWindow, "shs", ("__sa", "__sb")),
+        snThreshold)
       .select(col("id_a"), col("id_b"))
-
+    val sim = hammingVerified(simhashSelfCandidates(
+        simhashBlocks(prep, "sh60")), maxHamming)
+      .select(col("id_a"), col("id_b"))
     // all three emit canonical (id_a < id_b) pairs by construction
     val pairs = lsh.unionByName(sn).unionByName(sim).distinct()
     (pairs, Seq(g, prep))
   }
+
+  /** The composed blockers' one-pass digest: (id, sig, shs, sh16, sh60)
+    * — minhash signature and hashed shingle set (LSH candidates and
+    * both jaccard verifies), the 16-bit simhash sort key and the
+    * 60-bit simhash blocks, one digest per token for both simhash
+    * widths ([[graft.functions.SimHash1660]]). The repartition is the
+    * digest stage's parallelism floor; callers persist the result. */
+  private[graft] def fingerprintPrep(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .select(col(idCol).as("id"),
+        graft.functions.MinHashShingles.column(col(textCol), 12).as("ms"),
+        graft.functions.SimHash1660.column(TextAnalysis.tokens(col(textCol)))
+          .as("sh"))
+      .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
+        col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
+
+  /** A [[fingerprintPrep]] frame projected onto the three per-blocker
+    * artifact schemas ([[signatureTable]], [[sortKeyTable]],
+    * [[simhashTable]]) — column names and order match exactly, since
+    * the incremental probes union them positionally with the stores. */
+  private[graft] def prepArtifacts(prep: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = (
+    prep.select(col("id"), col("sig"), col("shs").as("sh"))
+      .withColumn("bh", bandHashesLong(col("sig"), 4, 3)),
+    prep.select(col("id"), col("shs"), col("sh16").as("sh")),
+    prep.select(col("id"), col("sh60").as("sh")))
 
   /** INCREMENTAL composed blocked dedup pairs — the nightly call of a
     * production 100 TB dedup pipeline (q256/[[blockedDedupClusters]]
@@ -1332,31 +1280,13 @@ object Dedup {
       idCol: String, textCol: String, lshThreshold: Double = 0.5,
       snWindow: Int = 4, snThreshold: Double = 0.5, maxHamming: Int = 3,
       checkpointDir: Option[String] = None): DataFrame = {
-    require(snWindow >= 2, s"window must be >= 2, got $snWindow")
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"pigeonhole with 4 blocks certifies maxHamming <= 3, got $maxHamming")
-    val sp = newDocs.sparkSession
-    val par = sp.sparkContext.defaultParallelism
-    val toks = graft.llm.TextAnalysis.tokens(col(textCol))
-    // one digest pass over the batch: minhash sigs + hashed shingles
-    // + both simhash widths (the blockedDedupClusters prep, on the
-    // delta only)
-    val prep = newDocs.repartition(par).select(col(idCol).as("id"),
-        graft.functions.MinHashShingles
-          .column(col(textCol), 12).as("ms"),
-        graft.functions.SimHash1660.column(toks).as("sh"))
-      .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-        col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
-      .persist()
+    requireWindow(snWindow)
+    requireHamming(maxHamming)
+    // one digest pass over the batch (the blockedDedupClusters prep,
+    // on the delta only)
+    val prep = fingerprintPrep(newDocs, idCol, textCol).persist()
     try {
-      // column names/order mirror the three artifact tables exactly —
-      // the incremental probes union the frames positionally
-      val newSigs = prep.select(col("id"), col("sig"),
-          col("shs").as("sh"))
-        .withColumn("bh", bandHashesLong(col("sig"), 4, 3))
-      val newSk = prep.select(col("id"), col("shs"),
-        col("sh16").as("sh"))
-      val newFps = prep.select(col("id"), col("sh60").as("sh"))
+      val (newSigs, newSk, newFps) = prepArtifacts(prep)
       incrementalBlockedDedupPairsFromArtifacts(newSigs, newSk, newFps,
         sigTable, sortKeys, fpTable, lshThreshold, snWindow,
         snThreshold, maxHamming, checkpointDir)
@@ -1378,17 +1308,21 @@ object Dedup {
       lshThreshold: Double = 0.5, snWindow: Int = 4,
       snThreshold: Double = 0.5, maxHamming: Int = 3,
       checkpointDir: Option[String] = None): DataFrame = {
-    require(snWindow >= 2, s"window must be >= 2, got $snWindow")
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"pigeonhole with 4 blocks certifies maxHamming <= 3, got $maxHamming")
+    requireWindow(snWindow)
+    requireHamming(maxHamming)
     // The LSH and sorted-neighborhood probes each materialize their
     // (small) pair artifact EAGERLY and are fully independent — run
     // them as concurrent jobs (guide §2.6 "overlap independent jobs")
     // instead of back-to-back: the scheduler back-fills one probe's
     // straggler tail with the other's tasks, and the wall clock is
-    // max(probe) instead of sum(probe). Shared upstream caches (the
-    // caller's batch prep) are materialized under Spark's block-level
-    // locking, so concurrent first-use computes each block once.
+    // max(probe) instead of sum(probe). That holds for the default
+    // executor-local pin only: with `checkpointDir = Some(_)` each
+    // probe's eager checkpoint runs inside Lineage.withCheckpointDir,
+    // which holds one global lock for its whole body, so the two
+    // probes run one after the other and the wall clock is
+    // sum(probe). Shared upstream caches (the caller's batch prep) are
+    // materialized under Spark's block-level locking, so concurrent
+    // first-use computes each block once.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -1567,12 +1501,10 @@ object Dedup {
     * fingerprint — the per-doc artifact an online crawl-dedup index
     * persists (8 bytes/doc; bucket by any block value for probe
     * locality). The simhash sibling of [[signatureTable]]. */
-  def simhashTable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sp = docs.sparkSession
-    docs.repartition(sp.sparkContext.defaultParallelism)
+  def simhashTable(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
         graft.functions.SimHash60.column(TextAnalysis.tokens(col(textCol))).as("sh"))
-  }
 
   /** Incremental Manku simhash pairs — the paper's actual ONLINE
     * setting (WWW'07 crawl dedup: "have we seen a near-dup of this
@@ -1590,16 +1522,9 @@ object Dedup {
     * probes). */
   def incrementalSimhashPairs(newFps: DataFrame, existingFps: DataFrame,
       maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"pigeonhole with 4 blocks certifies maxHamming <= 3, got $maxHamming")
-    def blocks(fps: DataFrame): DataFrame = fps.select(col("id"), col("sh"),
-        explode(array((0 until 4).map(i => struct(lit(i).as("blk"),
-          shiftright(col("sh"), 15 * i).bitwiseAND(lit(32767L))
-            .as("bval"))): _*)).as("__b"))
-      .select(col("id"), col("sh"), col("__b.blk").as("blk"),
-        col("__b.bval").as("bval"))
-    val newB = blocks(newFps)
-    val allB = blocks(existingFps.unionAll(newFps))
+    requireHamming(maxHamming)
+    val newB = simhashBlocks(newFps)
+    val allB = simhashBlocks(existingFps.unionAll(newFps))
     // canonicalize orientation BEFORE the distinct: a new×new pair is
     // probed from both sides with (sh, sh') swapped — aligning sh_a
     // to the smaller id makes the two emissions identical rows, so
@@ -1615,60 +1540,42 @@ object Dedup {
         when(col("a.id") < col("b.id"), col("b.sh"))
           .otherwise(col("a.sh")).as("__sb"))
       .distinct()
-    cands
-      .withColumn("hamming",
-        bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+    hammingVerified(cands, maxHamming)
   }
 
+  /** Sorted-neighborhood near-dup pairs (Hernández & Stolfo 1995, the
+    * OTHER classic dedup blocking beside LSH bands): sort the corpus
+    * by a locality key — the 16-bit simhash, so similar texts land
+    * adjacent — and verify exact shingle jaccard only between docs
+    * within `window` positions of each other in that order. Finds a
+    * different recall profile than minhash-LSH (simhash locality is
+    * weighted-token-set, LSH bands are shingle-set sample agreement),
+    * which is why production dedup stacks run both and union the
+    * pairs.
+    *
+    * Scale shape: the GLOBAL sort order is realized WITHOUT a global
+    * sort — the two-level banded rank (within-band `row_number` on
+    * the band shuffle + a 2^bandBits-row broadcast offset table,
+    * the budgetSelect construction). Candidates are the exact global
+    * (rank, rank+d) adjacencies for d < window, produced by a keyed
+    * equi-join on the rank (each row explodes into window−1 probe
+    * keys — O(n·window) candidate stream, never n²). Verification
+    * intersects each doc's PRECOMPUTED hashed shingle set
+    * ([[hashedShingles]]) — shingling runs once per doc, not
+    * 2·(window−1) times per doc as a per-pair re-shingle would, and
+    * the long arrays shuffle ~10× cheaper than the texts they
+    * replace (measured 4.78 → 0.64 s min at sf0.1, window 4). */
   def sortedNeighborPairs(docs: DataFrame, idCol: String, textCol: String,
       window: Int = 4, threshold: Double = 0.5,
       bandBits: Int = 0, materialize: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
-    require(window >= 2, s"window must be >= 2, got $window")
+    requireWindow(window)
     require(bandBits >= 0 && bandBits <= 16, s"bad bandBits $bandBits")
-    val sp = docs.sparkSession
-    val par = sp.sparkContext.defaultParallelism
-    // bandBits = 0 derives the band count from parallelism (4×
-    // oversubscribed, floored at 2^8 = 256, capped by the 16-bit
-    // simhash) — a constant would pin the within-band rank windows
-    // at corpus/256 rows per task on a big cluster. Banding is a
-    // parallel decomposition only: the two-level rank reconstructs
-    // the SAME global order for any band count.
-    val bb = if (bandBits > 0) bandBits
-      else math.min(16, math.max(8,
-        64 - java.lang.Long.numberOfLeadingZeros(math.max(1, par * 4L - 1))))
-    val base = docs.repartition(par).select(col(idCol).as("id"),
-        hashedShingles(col(textCol)).as("shs"),
-        graft.functions.SimHash16.column(TextAnalysis.tokens(col(textCol))).as("sh"))
-      .withColumn("band", shiftright(col("sh"), 16 - bb))
-    val wnd = Window.partitionBy("band").orderBy(col("sh"), col("id"))
-    val ranked = base.withColumn("rn", row_number().over(wnd))
-    // band offsets: the only unpartitioned window runs on the
-    // 2^bandBits-row count frame, then broadcasts back
-    val offs = ranked.groupBy("band").agg(count(lit(1)).as("bc"))
-      .withColumn("off", coalesce(sum(col("bc")).over(
-        Window.orderBy("band")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("band"), col("off"))
-    val g = ranked.join(broadcast(offs), Seq("band"))
-      .select(col("id"), col("shs"), (col("off") + col("rn")).as("gr"))
-      .persist()
-    val probes = g.select(col("id").as("__ia"), col("shs").as("__sa"),
-        explode(sequence(lit(1), lit(window - 1))).as("d"), col("gr"))
-      .select(col("__ia"), col("__sa"), (col("gr") + col("d")).as("gk"))
-    val cands = probes.join(
-      g.select(col("gr").as("gk"), col("id").as("__ib"),
-        col("shs").as("__sb")), Seq("gk"))
-    val inter = graft.functions.IntersectCountLong.column(col("__sa"), col("__sb"))
-    val jac = inter.cast("double") /
-      (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
-    val pairs = cands
-      .withColumn("jaccard", jac)
-      .filter(col("jaccard") >= threshold)
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("jaccard"))
+    val g = globalRank(sortKeyTable(docs, idCol, textCol),
+      snBandBits(bandBits, docs.sparkSession.sparkContext.defaultParallelism),
+      "shs").persist()
+    val pairs = snVerified(windowCandidates(g, window, "shs", ("__sa", "__sb")),
+      threshold)
     // Loan closed here by default: the (small, duplicate-pair-sized)
     // result is pinned eagerly and the ranked-frame cache released
     // before return — the materializeAndRelease rule, so repeated
@@ -1679,6 +1586,64 @@ object Dedup {
     if (materialize) materializeAndRelease(pairs, checkpointDir, Seq(g))
     else pairs
   }
+
+  private def requireWindow(window: Int): Unit =
+    require(window >= 2, s"window must be >= 2, got $window")
+
+  /** Sorted-neighborhood band bits: `bandBits`, or for 0 derived from
+    * parallelism (4× oversubscribed, floored at 2^8 = 256, capped by
+    * the 16-bit simhash) — a constant would pin the within-band rank
+    * windows at corpus/256 rows per task on a big cluster. Banding is
+    * a parallel decomposition only: the two-level rank reconstructs
+    * the SAME global order for any band count. */
+  private def snBandBits(bandBits: Int, par: Int): Int =
+    if (bandBits > 0) bandBits
+    else math.min(16, math.max(8,
+      64 - java.lang.Long.numberOfLeadingZeros(math.max(1, par * 4L - 1))))
+
+  /** The two-level banded rank of an (id, sh, `payload`) frame by
+    * (sh, id): within-band `row_number` on the band shuffle plus a
+    * 2^bb-row broadcast offset table — the global order without a
+    * global sort. Returns (id, `payload`, gr), gr the 1-based global
+    * rank. */
+  private def globalRank(keyed: DataFrame, bb: Int, payload: String): DataFrame = {
+    val ranked = keyed.withColumn("band", shiftright(col("sh"), 16 - bb))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("band").orderBy(col("sh"), col("id"))))
+    // band offsets: the only unpartitioned window runs on the
+    // 2^bandBits-row count frame, then broadcasts back
+    val offs = ranked.groupBy("band").agg(count(lit(1)).as("bc"))
+      .withColumn("off", coalesce(sum(col("bc")).over(
+        Window.orderBy("band")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(col("band"), col("off"))
+    ranked.join(broadcast(offs), Seq("band"))
+      .select(col("id"), col(payload), (col("off") + col("rn")).as("gr"))
+  }
+
+  /** Window-adjacency candidates over a [[globalRank]] frame: every
+    * (rank, rank + d) pair for 0 < d < window, by a keyed equi-join on
+    * the rank (each row explodes into window − 1 probe keys —
+    * O(n·window), never n²). Rows carry (__ia, __ib) and the payload
+    * of each side under `names`. */
+  private def windowCandidates(g: DataFrame, window: Int, payload: String,
+      names: (String, String)): DataFrame = {
+    val probes = g.select(col("id").as("__ia"), col(payload).as(names._1),
+        explode(sequence(lit(1), lit(window - 1))).as("d"), col("gr"))
+      .select(col("__ia"), col(names._1), (col("gr") + col("d")).as("gk"))
+    probes.join(g.select(col("gr").as("gk"), col("id").as("__ib"),
+      col(payload).as(names._2)), Seq("gk"))
+  }
+
+  /** The sorted-neighborhood verify over candidates carrying both
+    * shingle sets (__sa, __sb): canonical (id_a, id_b, jaccard) at or
+    * above `threshold`. */
+  private def snVerified(cands: DataFrame, threshold: Double): DataFrame =
+    cands
+      .withColumn("jaccard", jaccardLong(col("__sa"), col("__sb")))
+      .filter(col("jaccard") >= threshold)
+      .select(least(col("__ia"), col("__ib")).as("id_a"),
+        greatest(col("__ia"), col("__ib")).as("id_b"), col("jaccard"))
 
   /** EXACT set-similarity self-join via prefix filtering (the PPJoin
     * family — Chaudhuri/Ganti/Kaushik ICDE'06 prefix filter with
@@ -1724,9 +1689,9 @@ object Dedup {
       s"saltBuckets must be in [2,1024], got $saltBuckets")
     val sp = docs.sparkSession
     val par = sp.sparkContext.defaultParallelism
-    // sorted sets: the verification kernel is a primitive merge pass
-    // (SortedIntersectCount) instead of array_intersect's boxed hash
-    // set — on millions of candidates the boxing dominated the join
+    // sorted sets: the rarity ranks read them, and the verify kernel
+    // ([[jaccardLong]]) takes its copy-free merge pass on strictly
+    // ascending inputs instead of copying and sorting both sides
     val base = docs.repartition(par).select(col(idCol).as("id"),
       array_sort(hashedShingles(col(textCol))).as("shs")).persist()
     val tok = base.select(col("id"), size(col("shs")).as("n"),
@@ -1864,15 +1829,10 @@ object Dedup {
     val cands = coldCands.unionByName(hotCands)
       .observe(s"${obsTag}_cands", count(lit(1)).as("cand_rows_post"))
       .distinct()
-    val withSets = cands
-      .join(base.select(col("id").as("__ia"), col("shs").as("__sa")),
-        Seq("__ia"))
-      .join(base.select(col("id").as("__ib"), col("shs").as("__sb")),
-        Seq("__ib"))
-    val inter = graft.functions.SortedIntersectCount.column(col("__sa"), col("__sb"))
-    val jac = inter.cast("double") /
-      (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
-    val pairs = withSets.withColumn("jaccard", jac)
+    val withSets = withSides(cands, base, ("__ia", "__ib"),
+      "shs" -> ("__sa", "__sb"))
+    val pairs = withSets
+      .withColumn("jaccard", jaccardLong(col("__sa"), col("__sb")))
       .filter(col("jaccard") >= threshold)
       .select(col("__ia").as("id_a"), col("__ib").as("id_b"),
         col("jaccard"))
@@ -1885,13 +1845,11 @@ object Dedup {
     * [[signatureTable]] (minhash-LSH) and [[simhashTable]] (Manku
     * blocks), completing the online path for the third blocker. */
   def sortKeyTable(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val sp = docs.sparkSession
-    val par = sp.sparkContext.defaultParallelism
-    docs.repartition(par).select(col(idCol).as("id"),
-      hashedShingles(col(textCol)).as("shs"),
-      graft.functions.SimHash16.column(TextAnalysis.tokens(col(textCol))).as("sh"))
-  }
+      textCol: String): DataFrame =
+    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .select(col(idCol).as("id"),
+        hashedShingles(col(textCol)).as("shs"),
+        graft.functions.SimHash16.column(TextAnalysis.tokens(col(textCol))).as("sh"))
 
   /** Incremental sorted-neighborhood pairs: a new batch against the
     * stored [[sortKeyTable]], emitting exactly the FULL-run pairs
@@ -1918,48 +1876,20 @@ object Dedup {
       window: Int = 4, threshold: Double = 0.5, bandBits: Int = 0,
       materialize: Boolean = true,
       checkpointDir: Option[String] = None): DataFrame = {
-    require(window >= 2, s"window must be >= 2, got $window")
+    requireWindow(window)
     require(bandBits >= 0 && bandBits <= 16, s"bad bandBits $bandBits")
-    val sp = stored.sparkSession
-    val par = sp.sparkContext.defaultParallelism
-    val bb = if (bandBits > 0) bandBits
-      else math.min(16, math.max(8,
-        64 - java.lang.Long.numberOfLeadingZeros(math.max(1, par * 4L - 1))))
     val keys = stored.select(col("id"), col("sh"), lit(false).as("new"))
       .unionByName(batch.select(col("id"), col("sh"), lit(true).as("new")))
-      .withColumn("band", shiftright(col("sh"), 16 - bb))
-    val wnd = Window.partitionBy("band").orderBy(col("sh"), col("id"))
-    val ranked = keys.withColumn("rn", row_number().over(wnd))
-    val offs = ranked.groupBy("band").agg(count(lit(1)).as("bc"))
-      .withColumn("off", coalesce(sum(col("bc")).over(
-        Window.orderBy("band")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("band"), col("off"))
-    val g = ranked.join(broadcast(offs), Seq("band"))
-      .select(col("id"), col("new"), (col("off") + col("rn")).as("gr"))
-      .persist()
-    val probes = g.select(col("id").as("__ia"), col("new").as("__na"),
-        explode(sequence(lit(1), lit(window - 1))).as("d"), col("gr"))
-      .select(col("__ia"), col("__na"), (col("gr") + col("d")).as("gk"))
-    val cands = probes.join(
-        g.select(col("gr").as("gk"), col("id").as("__ib"),
-          col("new").as("__nb")), Seq("gk"))
+    val g = globalRank(keys,
+      snBandBits(bandBits, stored.sparkSession.sparkContext.defaultParallelism),
+      "new").persist()
+    val cands = windowCandidates(g, window, "new", ("__na", "__nb"))
       .filter(col("__na") || col("__nb"))
     val lib = stored.select(col("id"), col("shs"))
       .unionByName(batch.select(col("id"), col("shs")))
-    val withShs = cands
-      .join(lib.select(col("id").as("__ia"), col("shs").as("__sa")),
-        Seq("__ia"))
-      .join(lib.select(col("id").as("__ib"), col("shs").as("__sb")),
-        Seq("__ib"))
-    val inter = graft.functions.IntersectCountLong.column(col("__sa"), col("__sb"))
-    val jac = inter.cast("double") /
-      (size(col("__sa")) + size(col("__sb")) - inter).cast("double")
-    val pairs = withShs
-      .withColumn("jaccard", jac)
-      .filter(col("jaccard") >= threshold)
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("jaccard"))
+    val pairs = snVerified(
+      withSides(cands, lib, ("__ia", "__ib"), "shs" -> ("__sa", "__sb")),
+      threshold)
     if (materialize) materializeAndRelease(pairs, checkpointDir, Seq(g))
     else pairs
   }

@@ -329,6 +329,22 @@ object StreamingPipeline {
       .start()
   }
 
+  /** The batch ids a verified pair set kills, as `doc_id` rows — the
+    * keeper orientation of both corpus ingests. The STORE always wins:
+    * a stored doc can't be un-appended, so when a pair touches the
+    * store the batch member dies regardless of id order (a backfilled
+    * batch can carry ids SMALLER than stored near-dups); within-batch
+    * pairs keep the min id. Pair volume ∝ duplicates, so the two
+    * small joins are cheap. */
+  private def storeWinsDead(pairs: DataFrame, batchIds: DataFrame): DataFrame =
+    pairs
+      .join(batchIds, pairs("id_b") === batchIds("id"), "left_semi")
+      .select(col("id_b").as("doc_id")) // id_b in batch: min-id rule
+      .unionAll(pairs
+        .join(batchIds, pairs("id_b") === batchIds("id"), "left_anti")
+        .select(col("id_a").as("doc_id"))) // id_b stored: batch side dies
+      .distinct()
+
   /** Per-epoch corpus-ingest body (package-visible so the spec can
     * drive a single batch without a stream).
     *
@@ -382,20 +398,7 @@ object StreamingPipeline {
       // pair set eagerly and release every intermediate block
       val pairs = Dedup.incrementalLshPairs(newSigs, existing,
         threshold, materialize = true)
-      // keeper orientation: the STORE always wins — a stored doc can't
-      // be un-appended, so when a pair touches the store the batch
-      // member dies regardless of id order (a backfilled batch can
-      // carry ids SMALLER than stored near-dups); within-batch pairs
-      // keep the min id. Pair volume ∝ duplicates, so these two small
-      // joins are cheap.
-      val batchIds = newSigs.select(col("id"))
-      val dead = pairs
-        .join(batchIds, pairs("id_b") === batchIds("id"), "left_semi")
-        .select(col("id_b").as("doc_id")) // id_b in batch: min-id rule
-        .unionAll(pairs
-          .join(batchIds, pairs("id_b") === batchIds("id"), "left_anti")
-          .select(col("id_a").as("doc_id"))) // id_b stored: batch side dies
-        .distinct()
+      val dead = storeWinsDead(pairs, newSigs.select(col("id")))
       val survivors = cleaned.join(dead, Seq("doc_id"), "left_anti").cache()
       try {
         if (survivors.count() > 0) {
@@ -670,7 +673,7 @@ object StreamingPipeline {
       corpusDir: String, sigDir: String, sortKeyDir: String,
       fpDir: String, pairsDir: String, threshold: Double,
       snWindow: Int, maxHamming: Int, shardId: Long): Unit = {
-    import graft.llm.{Dedup, TextAnalysis}
+    import graft.llm.Dedup
     val spark = cleaned0.sparkSession
     // the sig store is the commit record for ALL FOUR stores: only
     // epoch ids whose sig partition committed are read from the
@@ -693,37 +696,15 @@ object StreamingPipeline {
       "left_anti")
     // ONE digest pass per epoch computes all three fingerprint
     // families (the q292 shared-prep shape on the streaming delta)
-    val par = spark.sparkContext.defaultParallelism
-    val toks = TextAnalysis.tokens(col("clean_text"))
-    val prep = cleaned.repartition(par).select(col("doc_id").as("id"),
-        graft.functions.MinHashShingles
-          .column(col("clean_text"), 12).as("ms"),
-        graft.functions.SimHash1660.column(toks).as("sh"))
-      .select(col("id"), col("ms.sig").as("sig"), col("ms.sh").as("shs"),
-        col("sh.sh16").as("sh16"), col("sh.sh60").as("sh60"))
+    val prep = Dedup.fingerprintPrep(cleaned, "doc_id", "clean_text")
       .persist()
     try {
-      val newSigs = prep.select(col("id"), col("sig"),
-          col("shs").as("sh"))
-        .withColumn("bh", Dedup.bandHashesLong(col("sig"), 4, 3))
-      val newSk = prep.select(col("id"), col("shs"),
-        col("sh16").as("sh"))
-      val newFps = prep.select(col("id"), col("sh60").as("sh"))
+      val (newSigs, newSk, newFps) = Dedup.prepArtifacts(prep)
       // eager, cache-released pair probe (the q292 call)
       val pairs = Dedup.incrementalBlockedDedupPairsFromArtifacts(
         newSigs, newSk, newFps, existingSigs, existingSk, existingFps,
         threshold, snWindow, threshold, maxHamming)
-      // keeper orientation: the STORE always wins (a stored doc can't
-      // be un-appended); within-batch pairs keep the min id — the
-      // corpusIngestBatch rule over the three-blocker pair union
-      val batchIds = prep.select(col("id"))
-      val dead = pairs
-        .join(batchIds, pairs("id_b") === batchIds("id"), "left_semi")
-        .select(col("id_b").as("doc_id"))
-        .unionAll(pairs
-          .join(batchIds, pairs("id_b") === batchIds("id"), "left_anti")
-          .select(col("id_a").as("doc_id")))
-        .distinct()
+      val dead = storeWinsDead(pairs, prep.select(col("id")))
       val survivors = cleaned.join(dead, Seq("doc_id"), "left_anti").cache()
       try {
         // The survivor gate is LOAD-BEARING for fresh-checkpoint

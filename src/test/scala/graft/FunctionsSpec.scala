@@ -166,28 +166,42 @@ class FunctionsSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "a", "b")
       .select(col("id"),
-        // exercise both raw (duplicate-bearing) and distinct inputs
+        // exercise raw (duplicate-bearing), distinct, both-sorted
+        // (the merge fast path) and one-side-sorted inputs
         col("a"), col("b"),
-        array_distinct(col("a")).as("ad"), array_distinct(col("b")).as("bd"))
-    val out = df.select(
-      size(array_intersect(col("a"), col("b"))).cast("long").as("ref"),
-      graft.functions.IntersectCountLong.column(col("a"), col("b")).as("nat"),
-      size(array_intersect(col("ad"), col("bd"))).cast("long").as("refd"),
-      graft.functions.IntersectCountLong.column(col("ad"), col("bd")).as("natd"))
+        array_distinct(col("a")).as("ad"), array_distinct(col("b")).as("bd"),
+        array_sort(array_distinct(col("a"))).as("as"),
+        array_sort(array_distinct(col("b"))).as("bs"))
+    val cases = Seq(("a", "b"), ("ad", "bd"), ("as", "bs"), ("as", "bd"),
+      ("ad", "bs"), ("as", "b"))
+    val out = df.select(cases.flatMap { case (x, y) => Seq(
+      size(array_intersect(col(x), col(y))).cast("long"),
+      graft.functions.IntersectCountLong.column(col(x), col(y))) }: _*)
       .collect()
     out.foreach { r =>
-      assert(r.getLong(0) == r.getLong(1), r.toString)
-      assert(r.getLong(2) == r.getLong(3), r.toString)
+      cases.indices.foreach(i =>
+        assert(r.getLong(2 * i) == r.getLong(2 * i + 1), s"${cases(i)} $r"))
     }
-    // null elements: present on both sides -> counted once; one side -> not
+    // null elements: present on both sides -> counted once; one side
+    // -> not. Then inputs the sorted merge must not take: one side
+    // ascending ([1,2] vs [3,1] — a merge trusting it stops at 3 and
+    // counts 0), non-strict ascending ([1,1,2] counts 1 once), and a
+    // null inside an otherwise ascending array (its slot must not read
+    // as the 0 on the other side).
     val e = Seq((Seq[java.lang.Long](1L, null, 3L), Seq[java.lang.Long](null, 3L)),
-      (Seq[java.lang.Long](1L, null), Seq[java.lang.Long](1L)))
+      (Seq[java.lang.Long](1L, null), Seq[java.lang.Long](1L)),
+      (Seq[java.lang.Long](1L, 2L), Seq[java.lang.Long](3L, 1L)),
+      (Seq[java.lang.Long](1L, 1L, 2L), Seq[java.lang.Long](1L, 2L, 3L)),
+      (Seq[java.lang.Long](1L, 1L, 2L), Seq[java.lang.Long](1L, 1L)),
+      (Seq[java.lang.Long](1L, null, 3L), Seq[java.lang.Long](1L, 3L)),
+      (Seq[java.lang.Long](null, 2L, 3L), Seq[java.lang.Long](0L, 3L)))
       .toDF("a", "b")
       .select(
         size(array_intersect(col("a"), col("b"))).cast("long").as("ref"),
         graft.functions.IntersectCountLong.column(col("a"), col("b")).as("nat"))
       .collect()
     e.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
+    assert(e.map(_.getLong(1)).toSeq == Seq(2L, 1L, 1L, 2L, 1L, 2L, 1L))
     // null array -> null, matching size(array_intersect)=null semantics
     val n = Seq(Tuple1(Seq(1L))).toDF("a")
       .select(

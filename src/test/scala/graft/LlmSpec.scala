@@ -3166,6 +3166,26 @@ class LlmSpec extends AnyFunSuite {
     assert(union.size > lsh.length || sn.nonEmpty || sim.nonEmpty)
   }
 
+  test("blockedDedupPairs: the pair set is exactly lshPairs ∪ sortedNeighborPairs ∪ simhashPairs") {
+    // The composed path runs each blocker's builder over one shared
+    // fingerprint prep; pair-for-pair equality with the three public
+    // functions is the guard that the shared prep feeds every builder
+    // the same inputs its public function computes for itself.
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lsh = Dedup.withLshPairs(docs, "doc_id", "text")(pairSet)
+    val sn = pairSet(Dedup.sortedNeighborPairs(docs, "doc_id", "text"))
+    val sim = pairSet(Dedup.simhashPairs(docs, "doc_id", "text"))
+    val got = pairSet(Dedup.blockedDedupPairs(docs, "doc_id", "text"))
+    assert(lsh.nonEmpty && sn.nonEmpty && sim.nonEmpty,
+      "fixture must trip every blocker for a meaningful test")
+    assert(got == lsh ++ sn ++ sim,
+      s"composed ${got.size} pairs vs union ${(lsh ++ sn ++ sim).size}: " +
+        s"missing ${(lsh ++ sn ++ sim -- got).take(5)}, " +
+        s"extra ${(got -- lsh -- sn -- sim).take(5)}")
+  }
+
   test("bbitJaccardEst: identical docs estimate exactly 1, estimate tracks exact jaccard on candidates") {
     import spark.implicits._
     // two identical docs: all 12 minima equal -> all b-bit coords
